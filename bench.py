@@ -85,6 +85,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import statistics
 import subprocess
 import sys
@@ -768,18 +769,41 @@ def _shed_query_precision(r):
     }
 
 
+def _prev_record_queries() -> set[str]:
+    """Query keys of the latest recorded bench result that has them
+    (``BENCH_rNN.json`` ``parsed.queries`` beside this file)."""
+    here = os.path.dirname(os.path.abspath(__file__))
+    records = sorted(
+        (int(m.group(1)), name)
+        for name in os.listdir(here)
+        if (m := re.fullmatch(r"BENCH_r(\d+)\.json", name))
+    )
+    for _, name in reversed(records):
+        try:
+            with open(os.path.join(here, name)) as f:
+                queries = (json.load(f).get("parsed") or {}).get("queries")
+        except (OSError, ValueError):
+            continue
+        if queries:
+            return set(queries)
+    return set()
+
+
 def _shed_fast_queries(r):
-    # last resort as the registry grows: keep as many of the SLOWEST
-    # queries as fit (the ones a perf reader needs) and say how many
-    # were omitted; full per-query walls always in BENCH_DETAIL.json
-    ordered = sorted(r["queries"].items(), key=lambda kv: -kv[1])
+    # last resort as the registry grows: keep every query key of the
+    # previous recorded result (a query that got faster must not fall off
+    # the line and read as missing), then as many of the SLOWEST others as
+    # fit, and say how many were omitted; full per-query walls always in
+    # BENCH_DETAIL.json
+    prev = _prev_record_queries()
+    ordered = sorted(r["queries"].items(), key=lambda kv: (kv[0] not in prev, -kv[1]))
     total = len(ordered)
     base = {**r, "queries": {}, "q_omitted": total}
     budget = 1870 - len(json.dumps(base, separators=(",", ":")))
     keep = {}
     for k, v in ordered:
         cost = len(json.dumps({k: v}, separators=(",", ":"))) - 1
-        if budget - cost < 0:
+        if budget - cost < 0 and k not in prev:
             break
         budget -= cost
         keep[k] = v

@@ -4,8 +4,13 @@ Shape (SURVEY.md §3, "Spark lifecycle of our engine"):
 
     pages scan (file-group pruned) → one ``mapInArrow`` stage running the
     pure-Python extraction kernel per Arrow batch (no per-row Python at
-    the JVM boundary) → doc_text rows carrying their partition_id + a
-    cumulative per-partition wall clock for lineage accounting.
+    the JVM boundary) → doc_text rows carrying their partition_id.
+
+**Lineage counters ride an accumulator, not the rows.** Given a
+``partition_stats`` accumulator, the kernel adds ``{partition_id: (pages,
+kernel_s)}`` per Arrow batch; the caller reads it after the action that
+consumed the rows (pipeline/lineage.py reads it after the doc_text write),
+so the per-partition lineage needs no second job over the data.
 
 **Why the default path has NO shuffle.** Extraction is a narrow per-row map
 whose cost is proportional to html bytes, and parquet scan splits are
@@ -26,21 +31,37 @@ here the only process boundary is the JVM↔Python Arrow exchange.
 
 from __future__ import annotations
 
+import functools
 import time
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark import Accumulator, AccumulatorParam
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, StructField, StructType
 
 from docling_ibm_models_spark import schemas
 from docling_ibm_models_spark.functions.html_extract import extract_main_content
 
-# doc_text + a per-partition cumulative wall clock (consumed by lineage agg)
-_EXTRACT_SCHEMA = StructType(
-    list(schemas.DOC_TEXT.fields) + [StructField("wall_s", DoubleType(), False)]
-)
+
+class _PartitionStatsParam(AccumulatorParam):
+    """``{partition_id: (pages, kernel_s)}``, merged by summing per key."""
+
+    def zero(self, value):
+        return {}
+
+    def addInPlace(self, acc, other):
+        for pid, (pages, secs) in other.items():
+            p0, s0 = acc.get(pid, (0, 0.0))
+            acc[pid] = (p0 + pages, s0 + secs)
+        return acc
+
+
+def partition_stats(spark: SparkSession) -> Accumulator:
+    """A fresh accumulator for :func:`extract_doc_text`'s ``stats``: after an
+    action over the extracted rows, ``.value`` maps each partition_id to
+    (pages extracted, summed kernel seconds)."""
+    return spark.sparkContext.accumulator({}, _PartitionStatsParam())
 
 
 def salt_partition(df: DataFrame, num_partitions: int, key: str = "url") -> DataFrame:
@@ -53,7 +74,7 @@ def salt_partition(df: DataFrame, num_partitions: int, key: str = "url") -> Data
     shuffle / skew handled explicitly"). ``partition_id`` is then BY
     CONSTRUCTION aligned with the physical partition (``pmod(murmur3(key),
     P)`` — deterministic per key), so per-partition lineage accounting
-    (wall_s) stays meaningful.
+    (pages, kernel seconds) stays meaningful.
 
     Earlier versions computed ``partition_id = pmod(xxhash64(key), P)``
     first and repartitioned ON that column — balls-in-bins: murmur3 over
@@ -69,7 +90,7 @@ def salt_partition(df: DataFrame, num_partitions: int, key: str = "url") -> Data
     )
 
 
-def _extract_batches_arrow(batches):
+def _extract_batches_arrow(batches, stats: Accumulator | None = None):
     """mapInArrow extraction kernel — the production hot path.
 
     Consumes/produces ``pyarrow.RecordBatch`` directly (the north-star
@@ -79,10 +100,11 @@ def _extract_batches_arrow(batches):
     natively from flat offset/value arrays (``ListArray.from_arrays`` over
     a ``StructArray``) instead of per-row Python dicts that Spark's pandas
     serializer would have to re-discover, and output batches are zero-copy
-    Arrow. Cumulative wall time per partition rides along for lineage,
-    matching ``_extract_batches`` (the pandas twin kept for differential
-    testing)."""
+    Arrow. With ``stats``, each batch adds its pages and kernel seconds
+    (the batch's own work, not time spent waiting on the JVM) per
+    partition_id."""
     import pyarrow as pa
+    import pyarrow.compute as pc
 
     span_type = pa.struct(
         [
@@ -92,10 +114,10 @@ def _extract_batches_arrow(batches):
             pa.field("block_idx", pa.int32(), nullable=False),
         ]
     )
-    t0 = time.monotonic()
     for rb in batches:
         if rb.num_rows == 0:
             continue
+        t0 = time.monotonic()
         names = rb.schema.names
         cols = {n: rb.column(i) for i, n in enumerate(names)}
         texts: list[str] = []
@@ -127,9 +149,7 @@ def _extract_batches_arrow(batches):
             fields=list(span_type),
         )
         spans_col = pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), span_struct)
-        wall = time.monotonic() - t0
-        n = rb.num_rows
-        yield pa.RecordBatch.from_arrays(
+        out = pa.RecordBatch.from_arrays(
             [
                 cols["url"],
                 cols["lang"],
@@ -138,27 +158,20 @@ def _extract_batches_arrow(batches):
                 pa.array(nchars, pa.int64()),
                 spans_col,
                 cols["partition_id"],
-                pa.array([wall] * n, pa.float64()),
             ],
-            names=[
-                "url",
-                "lang",
-                "extracted_text",
-                "n_blocks",
-                "n_chars",
-                "spans",
-                "partition_id",
-                "wall_s",
-            ],
+            names=schemas.DOC_TEXT.fieldNames(),
         )
+        if stats is not None:
+            secs = time.monotonic() - t0
+            n = rb.num_rows
+            counts = pc.value_counts(cols["partition_id"]).to_pylist()
+            stats.add({c["values"]: (c["counts"], secs * c["counts"] / n) for c in counts})
+        yield out
 
 
 def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """Arrow-batched extraction kernel (pandas twin of
-    ``_extract_batches_arrow``, kept for differential testing). Tracks
-    cumulative wall time so lineage can report per partition without a
-    second pass."""
-    t0 = time.monotonic()
+    ``_extract_batches_arrow``, kept for differential testing)."""
     for pdf in batches:
         if not len(pdf):
             continue
@@ -182,23 +195,23 @@ def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                     for s, e, lbl, i in spans
                 ]
             )
-        wall = time.monotonic() - t0
-        res = pd.DataFrame(out)
-        res["wall_s"] = wall
-        yield res
+        yield pd.DataFrame(out)
 
 
 def extract_doc_text(
     pages: DataFrame,
     num_partitions: int | None = None,
     partition_id: int | None = None,
+    stats: Accumulator | None = None,
 ) -> DataFrame:
-    """pages (input_hint shape) → doc_text rows (+wall_s helper column).
+    """pages (input_hint shape) → doc_text rows.
 
     Default: narrow map over the scan splits (no shuffle); ``partition_id``
     tags all rows with the caller's lineage partition (file-group id). If
     ``num_partitions`` is given instead, rows are salt-shuffled by url-hash
-    and partition_id is the salt bucket (legacy/keyed mode).
+    and partition_id is the salt bucket (legacy/keyed mode). ``stats``, a
+    :func:`partition_stats` accumulator, receives per-partition pages and
+    kernel seconds from every task that runs the kernel.
     """
     if num_partitions is not None:
         salted = salt_partition(pages, num_partitions)
@@ -207,7 +220,10 @@ def extract_doc_text(
     # explicit projection: only url/lang/html/partition_id cross the Arrow
     # boundary (ground-truth `text` + warc_ts stay JVM-side / pruned at scan)
     pruned = salted.select("url", "lang", "html", "partition_id")
-    return pruned.mapInArrow(_extract_batches_arrow, schema=_EXTRACT_SCHEMA)
+    kernel = _extract_batches_arrow
+    if stats is not None:
+        kernel = functools.partial(_extract_batches_arrow, stats=stats)
+    return pruned.mapInArrow(kernel, schema=schemas.DOC_TEXT)
 
 
 def extract_doc_text_pandas(
@@ -222,29 +238,9 @@ def extract_doc_text_pandas(
     else:
         salted = pages.withColumn("partition_id", F.lit(int(partition_id or 0)))
     pruned = salted.select("url", "lang", "html", "partition_id")
-    return pruned.mapInPandas(_extract_batches, schema=_EXTRACT_SCHEMA)
+    return pruned.mapInPandas(_extract_batches, schema=schemas.DOC_TEXT)
 
 
 def doc_text_clean(extracted: DataFrame) -> DataFrame:
-    """User-facing doc_text (drops the lineage helper column)."""
-    return extracted.drop("wall_s")
-
-
-def lineage_rows(extracted: DataFrame, snapshot_id: int) -> DataFrame:
-    """Aggregate per-partition lineage: (snapshot_id, partition_id,
-    doc_count, wall_s, status). Map-side-combinable hash agg — no extra
-    pass over the pages."""
-    return (
-        extracted.groupBy("partition_id")
-        .agg(
-            F.count(F.lit(1)).alias("doc_count"),
-            F.max("wall_s").alias("wall_s"),
-        )
-        .select(
-            F.lit(snapshot_id).cast("long").alias("snapshot_id"),
-            F.col("partition_id"),
-            F.col("doc_count").cast("long"),
-            F.col("wall_s"),
-            F.lit("committed").alias("status"),
-        )
-    )
+    """The user-facing doc_text columns of ``extracted``."""
+    return extracted.select(*schemas.DOC_TEXT.fieldNames())

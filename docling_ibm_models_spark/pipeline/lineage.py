@@ -9,16 +9,22 @@ tasks + ``df.writeTo(...).append()`` + a lineage table on a real cluster):
   generation params — the stand-in for an Iceberg ``VERSION AS OF``),
 * the input's data files are deterministically bucketed into **file
   groups** (= lineage partitions) by sorted order; each chunk of groups is
-  one Spark write job that reads ONLY its own files (scan pruning — resume
+  ONE Spark write job that reads only its own files (scan pruning — resume
   never rescans committed work, unlike a row-level url-hash filter which
-  would re-read everything), extracts, appends doc_text under
+  would re-read everything), extracts, and writes doc_text under
   ``out/doc_text/partition_id=…`` with dynamic partition overwrite
-  (idempotent per partition), then appends the chunk's lineage rows under
-  ``out/lineage/``. A chunk's lineage commits only after its data commits,
-  so lineage is always an under-approximation of durable work — safe to
-  resume from.
+  (idempotent per partition). The extraction kernel adds each
+  partition's pages and kernel seconds to an accumulator during that job;
+  once the write has returned, the chunk's lineage rows are built from the
+  accumulator on the driver and appended under ``out/lineage/``. A chunk's
+  lineage commits only after its data commits, so lineage is always an
+  under-approximation of durable work — safe to resume from.
 * **resume** = read lineage, select committed partition_ids for this
   snapshot, process only the complement's files.
+
+The small manifest and lineage writes are built JVM-side from literals
+(``_append_rows``), so a commit starts no Python worker besides the
+extraction's own.
 
 Reference parity note: the reference has no incremental machinery at all
 (SURVEY.md §2.7); this module is the Spark-native capability the north rule
@@ -29,14 +35,21 @@ from __future__ import annotations
 
 import zlib
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
-from docling_ibm_models_spark.pipeline.extract import (
-    doc_text_clean,
-    extract_doc_text,
-    lineage_rows,
+from docling_ibm_models_spark import schemas
+from docling_ibm_models_spark.pipeline.extract import extract_doc_text, partition_stats
+
+_MANIFEST = StructType(
+    [
+        StructField("snapshot_id", LongType()),
+        StructField("fingerprint", LongType()),
+        StructField("num_groups", IntegerType()),
+    ]
 )
 
 
@@ -81,6 +94,23 @@ def list_file_groups(
     return groups
 
 
+def _append_rows(spark: SparkSession, rows: list[tuple], schema: StructType, path: str) -> None:
+    """Append ``rows`` to the parquet table at ``path``. The rows are
+    literals in a one-partition JVM-side plan: ``spark.createDataFrame`` of
+    a list would plan a pickled Python RDD run by ``defaultParallelism``
+    Python tasks."""
+    structs = [
+        F.struct(*[F.lit(v).cast(f.dataType).alias(f.name) for v, f in zip(row, schema.fields)])
+        for row in rows
+    ]
+    (
+        spark.range(0, 1, 1, 1)
+        .select(F.inline(F.array(*structs)))
+        .write.mode("append")
+        .parquet(path)
+    )
+
+
 def _check_snapshot_manifest(
     spark: SparkSession, out_dir: str, snapshot_id: int, groups: list[list[str]]
 ) -> None:
@@ -104,7 +134,7 @@ def _check_snapshot_manifest(
     try:
         prev = {
             r.snapshot_id: (r.fingerprint, r.num_groups)
-            for r in spark.read.parquet(path).collect()
+            for r in spark.read.schema(_MANIFEST).parquet(path).collect()
         }
     except Exception:
         prev = {}
@@ -123,23 +153,20 @@ def _check_snapshot_manifest(
                 "a new snapshot_id + output dir to re-partition"
             )
         return
-    spark.createDataFrame(
-        [(snapshot_id, fingerprint, num_groups)],
-        "snapshot_id long, fingerprint long, num_groups int",
-    ).write.mode("append").parquet(path)
+    _append_rows(spark, [(snapshot_id, fingerprint, num_groups)], _MANIFEST, path)
 
 
 def committed_partitions(spark: SparkSession, out_dir: str, snapshot_id: int) -> set[int]:
     try:
-        lin = spark.read.parquet(f"{out_dir}/lineage")
+        lin = spark.read.schema(schemas.LINEAGE).parquet(f"{out_dir}/lineage")
     except Exception:
         return set()
+    # one row per committed chunk partition: a plain collect, no shuffle
     rows = (
         lin.filter(
             (F.col("snapshot_id") == snapshot_id) & (F.col("status") == "committed")
         )
         .select("partition_id")
-        .distinct()
         .collect()
     )
     return {r.partition_id for r in rows}
@@ -176,8 +203,15 @@ def run_extraction(
     elif input_format == "parquet":
         suffix = ".parquet"
 
+        pages_schema: StructType | None = None
+
         def read_group(files: list[str]) -> DataFrame:
-            return spark.read.parquet(*files)
+            # the schema is inferred once per run: inference runs a
+            # footer-reading Spark job per read
+            nonlocal pages_schema
+            if pages_schema is None:
+                pages_schema = spark.read.parquet(*files).schema
+            return spark.read.schema(pages_schema).parquet(*files)
 
     else:
         raise ValueError(f"unknown input_format {input_format!r}")
@@ -197,27 +231,28 @@ def run_extraction(
     docs_processed = 0
     processed_parts = 0
     for chunk in chunks:
-        # one scan per group (narrow, file-pruned), unioned into one job
-        extracted: DataFrame | None = None
-        for gid in chunk:
-            part = extract_doc_text(read_group(groups[gid]), partition_id=gid)
-            extracted = part if extracted is None else extracted.unionByName(part)
-        assert extracted is not None
-        extracted = extracted.persist()
-        try:
-            (
-                doc_text_clean(extracted)
-                .write.mode("overwrite")
-                .partitionBy("partition_id")
-                .parquet(f"{out_dir}/doc_text")
-            )
-            lin = lineage_rows(extracted, snapshot_id)
-            n = lin.agg(F.sum("doc_count")).collect()[0][0] or 0
-            lin.write.mode("append").parquet(f"{out_dir}/lineage")
-            docs_processed += int(n)
-            processed_parts += len(chunk)
-        finally:
-            extracted.unpersist()
+        # one scan per group (narrow, file-pruned), unioned into one write
+        # job. The write is a result stage: Spark applies a result task's
+        # accumulator update once per partition and drops the updates of
+        # failed attempts, so once it returns, ``stats`` holds exactly the
+        # committed pages and kernel seconds of every group.
+        stats = partition_stats(spark)
+        extracted = reduce(
+            DataFrame.unionByName,
+            [extract_doc_text(read_group(groups[g]), partition_id=g, stats=stats) for g in chunk],
+        )
+        (
+            extracted.write.mode("overwrite")
+            .partitionBy("partition_id")
+            .parquet(f"{out_dir}/doc_text")
+        )
+        counts = stats.value
+        rows = [
+            (snapshot_id, g, *counts.get(g, (0, 0.0)), "committed") for g in chunk
+        ]
+        _append_rows(spark, rows, schemas.LINEAGE, f"{out_dir}/lineage")
+        docs_processed += sum(r[2] for r in rows)
+        processed_parts += len(chunk)
 
     return RunReport(
         snapshot_id=snapshot_id,

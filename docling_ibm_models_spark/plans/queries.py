@@ -48,7 +48,12 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     the parquet files, so no data or results are cached. Entries are
     keyed by identity of the owning session so a stopped/replaced session
     can never serve a stale plan, and by sf_dir so scale factors never
-    mix."""
+    mix.
+
+    Invalidation rule: the file listing and the schema are snapshotted per
+    (session, sf_dir) at the first call. Files added to, removed from or
+    rewritten under ``sf_dir`` afterwards are not seen by later queries in
+    that session; call :func:`invalidate` after changing a table."""
     key = (sf_dir, name)
     hit = _T_CACHE.get(key)
     if hit is not None and hit[0] is spark:
@@ -59,6 +64,14 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 _T_CACHE: dict[tuple[str, str], tuple[SparkSession, DataFrame]] = {}
+
+
+def invalidate(sf_dir: str) -> None:
+    """Drop the memoized scans of ``sf_dir`` (and with them their
+    ``_dims_scan_parts`` memos); the next ``_t`` call re-lists the files and
+    re-infers the schema."""
+    for key in [k for k in _T_CACHE if k[0] == sf_dir]:
+        del _T_CACHE[key]
 
 
 # common hash in both dialects
@@ -134,7 +147,10 @@ def _spread(
     # SAME partition count as df (callers pass the base scan when df is a
     # narrow filter/project derivation of it — narrow transforms preserve
     # partitioning 1:1), letting the probe hit the memoized scan rather
-    # than plan the derived subtree.
+    # than plan the derived subtree. The memo assumes a fixed
+    # spark.sql.files.maxPartitionBytes (and openCostInBytes) for the
+    # session: changing either after the first probe re-splits the scan,
+    # but the memo keeps the old count (``invalidate`` drops it).
     src = probe if probe is not None else df
     n = getattr(src, "_dims_scan_parts", None)
     if n is None:

@@ -58,7 +58,12 @@ DOC_TEXT = StructType(
 )
 
 # ---------------------------------------------------------------------------
-# Per-partition lineage rows (north rule: resumable with lineage + metrics)
+# Per-partition lineage rows (north rule: resumable with lineage + metrics).
+# One row per file group of a committed chunk: ``doc_count`` is the pages
+# extracted from the group and ``wall_s`` the extraction kernel's seconds
+# summed over every Arrow batch of the group (CPU-side work in the Python
+# workers, not the chunk's wall clock; tasks run in parallel, so it can
+# exceed it).
 # ---------------------------------------------------------------------------
 LINEAGE = StructType(
     [

@@ -86,8 +86,7 @@ def _run_extract_stream(
     extracted = (
         pages.withColumn("partition_id", F.lit(0))
         .select("url", "lang", "html", "partition_id")
-        .mapInPandas(_extract_batches, schema=_extract_schema())
-        .drop("wall_s")
+        .mapInPandas(_extract_batches, schema=schemas.DOC_TEXT)
     )
     q = (
         extracted.writeStream.format("parquet")
@@ -99,12 +98,6 @@ def _run_extract_stream(
     if await_termination:
         q.awaitTermination()
     return q
-
-
-def _extract_schema():
-    from docling_ibm_models_spark.pipeline.extract import _EXTRACT_SCHEMA
-
-    return _EXTRACT_SCHEMA
 
 
 def stream_events_windowed(events_stream: DataFrame) -> DataFrame:

@@ -5,7 +5,9 @@ compact-line length budget with its payload-shedding chain."""
 
 from __future__ import annotations
 
+import contextlib
 import importlib.util
+import io
 import json
 import os
 
@@ -209,6 +211,25 @@ def test_emit_prints_parseable_line_at_every_stage(capsys):
     # _emit sheds a COPY: the caller's dict keeps every field for later stages
     assert "eff_median_clean" in full["scaling"]
     assert len(full["queries"]) > 100
+
+
+def test_captured_tail_keeps_previous_record_keys():
+    """The bench's result is read from stdout and stderr merged, the last
+    2000 chars kept, the final line parsed. Every query key of the previous
+    record must be on it, even when those queries are now the fastest."""
+    prev = bench._prev_record_queries()
+    assert len(prev) >= 50
+    result = _full_result()
+    result["queries"] = {k: 9.9 for k in result["queries"]}
+    result["queries"].update({k: 0.1 for k in prev})
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf), contextlib.redirect_stderr(buf):
+        bench._emit(result)
+    captured = buf.getvalue()[-2000:]
+    assert "_shed_fast_queries" in captured  # the registry outgrew the budget
+    last = json.loads(captured.strip().splitlines()[-1])
+    assert set(last["queries"]) >= prev
+    assert last["q_omitted"] > 0
 
 
 def test_deadline_gate_skips_optional_pairs():

@@ -3,6 +3,8 @@
 
 from __future__ import annotations
 
+import re
+
 import duckdb
 import pytest
 from pyspark.sql import functions as F
@@ -104,9 +106,55 @@ def test_lineage_and_resume(spark, tmp_path):
     ).collect()[0]
     assert agg[0] == 8 and agg[1] == 500
 
+    # per partition, lineage doc_count is the doc_text row count (the
+    # accumulator counts exactly the committed pages) and wall_s the
+    # kernel's summed seconds
+    lin_rows = lin.filter(F.col("snapshot_id") == snap).collect()
+    per_part = dict(result.groupBy("partition_id").count().collect())
+    assert {r.partition_id: r.doc_count for r in lin_rows} == per_part
+    assert all(r.wall_s > 0 for r in lin_rows)
+
     # re-run on completed state: no-op
     r3 = run_extraction(spark, pages_path, out_dir, snap, num_partitions=8)
     assert r3.partitions_processed == 0
+
+
+# jobs of one 8-group chunk into a fresh out dir before the one-job commit:
+# a Python-RDD manifest write, 8 schema inferences, the doc_text write over
+# a cached chunk, 3 jobs for the lineage aggregate and 2 for its write
+_JOBS_PER_CHUNK_BEFORE = 15
+_PYTHON_STAGE = re.compile(r"PythonRDD|MapInArrow|MapInPandas|EvalPython")
+
+
+def test_one_chunk_commit_runs_one_python_job(spark, tmp_path):
+    """A chunk is one write job that runs the kernel; the manifest write,
+    the schema inference and the lineage append run no Python worker."""
+    pages_path = str(tmp_path / "pages")
+    pages_from_documents(spark, SF_SMALL, parallelism=8).write.parquet(pages_path)
+    sc = spark.sparkContext
+    sc.setJobGroup("one_chunk", "one_chunk")
+    try:
+        run_extraction(spark, pages_path, str(tmp_path / "out"), snapshot_id_for("one"),
+                       num_partitions=8)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the status store is fed asynchronously
+    jobs = sc.statusTracker().getJobIdsForGroup("one_chunk")
+    # manifest write, one schema inference, doc_text write, lineage write
+    assert len(jobs) == 4 < _JOBS_PER_CHUNK_BEFORE
+
+    store = sc._jsc.sc().statusStore()
+    graph = sc._jvm.org.apache.spark.ui.scope.RDDOperationGraph
+    stages = [
+        str(graph.makeDotFile(store.operationGraphForStage(s)))
+        for j in jobs
+        for s in sc.statusTracker().getJobInfo(j).stageIds
+    ]
+    writes = [d for d in stages if "WriteFiles" in d]
+    python = [d for d in writes if _PYTHON_STAGE.search(d)]
+    assert len(writes) == 3 and len(python) == 1
+    assert "MapInArrow" in python[0]
 
 
 def test_idempotent_rerun_partition_overwrite(spark, tmp_path):

@@ -60,6 +60,15 @@ def test_t_memo_invalidated_for_new_session(spark):
     assert rebuilt.count() == fresh.count()
 
 
+def test_invalidate_drops_only_that_sf_dir(spark):
+    small = Q._t(spark, SF_SMALL, "documents")
+    med = Q._t(spark, SF_MED, "documents")
+    Q.invalidate(SF_SMALL)
+    assert (SF_SMALL, "documents") not in Q._T_CACHE
+    assert Q._T_CACHE[(SF_MED, "documents")][1] is med
+    assert Q._t(spark, SF_SMALL, "documents") is not small
+
+
 def test_spread_probe_matches_direct_decision(spark):
     base = Q._t(spark, SF_MED, "lineitem")
     derived = base.where(F.col("l_linenumber") <= 3).select(
