@@ -126,6 +126,20 @@ _MAT_SCRATCH: str | None = None
 _MAT_SEQ = 0
 
 
+def _local_table(spark: SparkSession, rows: list, schema) -> DataFrame:
+    """A small literal table as a JVM-local relation. ``createDataFrame``
+    of a Python list plans a ``Scan ExistingRDD`` whose partitions run as
+    Python tasks on every execution; from a pandas frame with Arrow enabled
+    the rows cross once, at build time, into a ``LocalTableScan``."""
+    import pandas as pd
+    from pyspark.sql.types import StructType
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    pdf = pd.DataFrame(rows, columns=schema.fieldNames())
+    return spark.createDataFrame(pdf, schema=schema)
+
+
 def _spread(
     df: DataFrame, key: str = "doc_id", probe: DataFrame | None = None
 ) -> DataFrame:
@@ -1948,53 +1962,62 @@ NGRAM_DF_CAP = 100  # stop-phrase cap; mirrored in the oracle SQL below
     """,
 )
 def dedup_ngram_jaccard(spark, sf_dir):
-    """3-gram shingle Jaccard near-dup pairs: explode shingles → equi-join
-    on shingle (the LSH-free exact variant) → per-pair intersection count →
-    Jaccard via inclusion-exclusion. The shingle join is the only wide op.
+    """3-gram shingle Jaccard near-dup pairs: explode shingles → pair the
+    documents of each shingle (the LSH-free exact variant) → per-pair
+    intersection count → Jaccard via inclusion-exclusion.
 
     Document-frequency band prune (df in (1, NGRAM_DF_CAP]) on BOTH engines:
     df=1 shingles cannot form a pair (output-equivalent prune), and
-    df > cap shingles are stop-phrases whose self-join blow-up is Σdf²
+    df > cap shingles are stop-phrases whose pair blow-up is Σdf²
     (quadratic — the round-1 scale-killer); capping them is the standard
     near-dup practice (cf. CCNet/SlimPajama) and is mirrored exactly in the
     oracle, so results stay comparable.
 
-    Round-6: the shingle frame is materialized ONCE (distributed temp-
-    parquet scan). The lazily-composed plan evaluated the shingling UDF in
-    five separate subtrees (both self-join sides, the df prune, both size
-    lookups), each doubled by filter-pushdown duplication before
-    _shingles_spark went nondeterministic — ~10 ArrowEvalPython corpus
-    scans for one logical shingling (round-6 before-plan). At 10^12 docs
-    the same call is the standard write-the-shingle-table-once shape
-    (guide §2.3)."""
+    Posting-list shape, one plan, no join: the shingling UDF runs once
+    (one ArrowEvalPython) and each (doc_id, n, s) row is exploded from it.
+    A ``count(1) OVER (PARTITION BY s)`` window gives each shingle's df and
+    keeps 1 < df <= NGRAM_DF_CAP. ``groupBy(s)`` then collects each kept
+    shingle's posting list of (doc_id, n); it runs on the window's hash
+    partitioning on s, so it adds no exchange. Exploding the list twice
+    with a.doc_id < b.doc_id yields one row per co-occurring pair per
+    shingle, and counting per (doc_a, doc_b, na, nb) gives n_common with
+    both sizes already attached. No temp-parquet materialization, no
+    self-join, no separate df-prune join and no size lookup joins.
+
+    Scale rule: the df prune runs before any collect_list. A shingle that
+    sits in billions of documents never reaches an unbounded per-key
+    buffer; the window sorts and spills instead. Each posting list then
+    holds at most NGRAM_DF_CAP entries, and the exploded pair volume is
+    exactly the output of the former shingle self-join."""
+    from pyspark.sql import Window
+
     docs = _spread(_t(spark, sf_dir, "documents"))
-    sh = _materialize_scan(_shingles_spark(docs), spark)
-    ex = sh.select("doc_id", F.explode("shingles").alias("s"))
-    sizes = sh.select("doc_id", F.size("shingles").alias("n"))
-    shared = (
-        ex.groupBy("s")
-        .agg(F.count(F.lit(1)).alias("df"))
+    ex = _shingles_spark(docs).select(
+        "doc_id", F.size("shingles").alias("n"), F.explode("shingles").alias("s")
+    )
+    df = F.count(F.lit(1)).over(Window.partitionBy("s"))
+    postings = (
+        ex.withColumn("df", df)
         .where((F.col("df") > 1) & (F.col("df") <= NGRAM_DF_CAP))
-        .select("s")
+        .groupBy("s")
+        .agg(F.collect_list(F.struct("doc_id", "n")).alias("p"))
     )
-    ex = ex.join(shared, "s")
-    a, b = ex.alias("a"), ex.alias("b")
-    inter = (
-        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count(F.lit(1)).alias("n_common"))
+    pairs = (
+        postings.select(F.explode("p").alias("a"), "p")
+        .select("a", F.explode("p").alias("b"))
+        .where(F.col("a.doc_id") < F.col("b.doc_id"))
     )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
+    inter = pairs.groupBy(
+        F.col("a.doc_id").alias("doc_a"),
+        F.col("b.doc_id").alias("doc_b"),
+        F.col("a.n").alias("na"),
+        F.col("b.n").alias("nb"),
+    ).agg(F.count(F.lit(1)).alias("n_common"))
     jac = F.col("n_common").cast("double") / (
         F.col("na") + F.col("nb") - F.col("n_common")
     )
     return (
-        inter.join(F.broadcast(sa), "doc_a")
-        .join(F.broadcast(sb), "doc_b")
-        .where(jac >= 0.2)
+        inter.where(jac >= 0.2)
         .select("doc_a", "doc_b", F.round(jac, 4).alias("jaccard"))
         .orderBy("doc_a", "doc_b")
     )
@@ -3512,7 +3535,7 @@ def _reading_order_df(spark):
                     float(e.page_width), float(e.page_height),
                 )
             )
-    df = spark.createDataFrame(rows, schema=schemas.PAGE_ELEMENT)
+    df = _local_table(spark, rows, schemas.PAGE_ELEMENT)
     return order_elements(df, num_partitions=4).select(
         "url", "cid", "label", "reading_rank"
     )
@@ -3727,8 +3750,8 @@ def ann_ivf_topk(spark, sf_dir):
     pass and the probe prunes the candidate set by ~k/nprobe; the
     brute-force twin is ann_cosine_topk."""
     cents = _ivf_centroids()
-    centroids = spark.createDataFrame(
-        [(i, c) for i, c in enumerate(cents)], "cid int, cv array<double>"
+    centroids = _local_table(
+        spark, list(enumerate(cents)), "cid int, cv array<double>"
     )
     emb = _t(spark, sf_dir, "embeddings")
     dbl = F.transform(F.col("embedding"), lambda x: x.cast("double"))
@@ -6552,8 +6575,8 @@ def corpus_robots_rules(spark, sf_dir):
             F.lpad(F.col("doc_id").cast("string"), 8, "0"),
         ).alias("path"),
     )
-    rules = spark.createDataFrame(
-        _ROBOTS_RULES, "sgrp int, prefix string, allow int"
+    rules = _local_table(
+        spark, _ROBOTS_RULES, "sgrp int, prefix string, allow int"
     )
     # Round-6: single-pass evaluation — a LEFT broadcast join keeps
     # unmatched urls in the stream (null score → spec default-allow), so
@@ -7386,7 +7409,8 @@ def corpus_phrase_search(spark, sf_dir):
     O(matches) aggregation. [engine addition: search primitive]"""
     docs = _t(spark, sf_dir, "documents")
     vocab = sorted({w for p in _PHRASES for w in p.split()})
-    ph = spark.createDataFrame(
+    ph = _local_table(
+        spark,
         [(p, *p.split()) for p in _PHRASES],
         "phrase string, p1 string, p2 string, p3 string",
     )

@@ -50,9 +50,9 @@ def _norm(v):
     return str(v)
 
 
-def _rows_to_set(cols, rows):
+def _rows_to_set(cols, rows, norm=_norm):
     idx = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted(tuple(_norm(r[i]) for i in idx) for r in rows)
+    return sorted(tuple(norm(r[i]) for i in idx) for r in rows)
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES.keys()))
@@ -65,9 +65,10 @@ def test_query_matches_oracle(spark, duck, name):
         assert len(srows) >= 0  # rows-only check, like the driver
         return
     res = duck.execute(ORACLES[name])
-    dcols = [d[0] for d in res.description]
-    drows = res.fetchall()
+    _assert_rows_match(name, scols, srows, [d[0] for d in res.description], res.fetchall())
 
+
+def _assert_rows_match(name, scols, srows, dcols, drows):
     assert sorted(scols) == sorted(dcols), f"{name}: column names differ"
     assert len(srows) == len(drows), f"{name}: row count {len(srows)} vs {len(drows)}"
     sset = _rows_to_set(scols, srows)
@@ -76,6 +77,54 @@ def test_query_matches_oracle(spark, duck, name):
         diff_s = [r for r in sset if r not in dset][:5]
         diff_d = [r for r in dset if r not in sset][:5]
         raise AssertionError(f"{name}: value mismatch\nspark-only={diff_s}\nduck-only={diff_d}")
+
+
+def test_ngram_jaccard_df_cap_boundary(spark, tmp_path):
+    """dedup_ngram_jaccard's df prune at its edges, against the unchanged
+    oracle on one synthetic documents table: a shingle in exactly
+    NGRAM_DF_CAP docs is kept, one in NGRAM_DF_CAP + 1 docs is pruned (it
+    would raise every pair's n_common), a single-doc shingle pairs with
+    nothing, a doc that repeats a shingle counts it once, and a doc with
+    fewer than 3 tokens has no shingles at all."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from docling_ibm_models_spark.plans.queries import NGRAM_DF_CAP
+
+    cap = NGRAM_DF_CAP
+    # docs 0..cap-1 share "k1 k2 k3 x1 x2 x3" (df = cap for the k-shingles)
+    # plus a private tail of i % 5 "u<i>" tokens; a tail of 4 repeats the
+    # shingle "u<i> u<i> u<i>".
+    texts = [
+        "k1 k2 k3 x1 x2 x3" + f" u{i}" * (i % 5) for i in range(cap)
+    ]
+    texts += [
+        "x1 x2 x3",          # lifts "x1 x2 x3" to df = cap + 1
+        "s1 s2 s3 s4",       # single-doc shingles only
+        "two tokens",        # < 3 tokens: no shingles
+        "p1 p2 p3 p4",       # df = 2 pair, jaccard 1/3
+        "p1 p2 p3 q4",
+    ]
+    path = tmp_path / "documents.parquet"
+    pq.write_table(
+        pa.table({"doc_id": pa.array(range(len(texts)), pa.int64()), "text": texts}),
+        path,
+    )
+    sdf = QUERIES["dedup_ngram_jaccard"](spark, str(tmp_path))
+    scols = sdf.columns
+    srows = [tuple(r) for r in sdf.collect()]
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{path}')")
+    res = con.execute(ORACLES["dedup_ngram_jaccard"])
+    dcols = [d[0] for d in res.description]
+    drows = res.fetchall()
+    con.close()
+
+    assert {(cap - 2, cap - 1), (cap + 3, cap + 4)} <= {r[:2] for r in srows}
+    _assert_rows_match("dedup_ngram_jaccard", scols, srows, dcols, drows)
+    # both sides already round to 4 dp, so the raw values must agree too
+    raw = {"norm": lambda v: v}
+    assert _rows_to_set(scols, srows, **raw) == _rows_to_set(dcols, drows, **raw)
 
 
 def test_shingle_tokenization_matches_oracle_on_hostile_whitespace(spark, duck):

@@ -475,3 +475,26 @@ def test_phrase_search_query_plan(spark):
     assert "BroadcastHashJoin" in plan
     assert not re.findall(r"Location:[^\n]*documents\.parquet", plan)
     assert len(re.findall(r"Location:[^\n]*dims_mat", plan)) == 3
+
+
+def test_ngram_jaccard_is_one_posting_list_plan(spark):
+    """dedup_ngram_jaccard: the shingle UDF is evaluated once, inside the
+    plan (no temp-parquet materialization), and docs are paired within each
+    shingle's posting list — no join of any kind."""
+    plan = plan_of(QUERIES["dedup_ngram_jaccard"](spark, SF_MED))
+    assert plan.count(") ArrowEvalPython") == 1
+    for join in ("SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin"):
+        assert join not in plan, join
+    assert not re.findall(r"Location:[^\n]*dims_mat_", plan)
+
+
+def test_literal_tables_are_local_relations(spark):
+    """Small literal tables are JVM-local relations, not Python-RDD scans
+    whose partitions run as Python tasks on every execution."""
+    for name in (
+        "pipeline_reading_order", "ann_ivf_topk", "corpus_robots_rules",
+        "corpus_phrase_search",
+    ):
+        plan = plan_of(QUERIES[name](spark, SF_MED))
+        assert "Scan ExistingRDD" not in plan, name
+        assert "LocalTableScan" in plan, name
