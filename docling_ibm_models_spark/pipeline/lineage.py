@@ -22,9 +22,18 @@ tasks + ``df.writeTo(...).append()`` + a lineage table on a real cluster):
 * **resume** = read lineage, select committed partition_ids for this
   snapshot, process only the complement's files.
 
-The small manifest and lineage writes are built JVM-side from literals
-(``_append_rows``), so a commit starts no Python worker besides the
-extraction's own.
+A chunk commit runs exactly one Spark job, the doc_text write. The
+one-row manifest and lineage appends (``_append_rows``) are driver-side
+file-system work, the way a Delta Lake commit is one small log file put
+by the driver: the rows are serialized with pyarrow, written through the
+table's Hadoop ``FileSystem`` to a hidden ``_tmp-<uuid>.parquet`` and
+renamed to ``part-<uuid>.parquet``. ``lineage/`` and ``_manifest_v2/`` stay
+plain parquet tables; Spark's file index skips ``_``-prefixed files, so a
+crash before the rename leaves no visible row. Readers check
+``fs.exists`` before reading, so a fresh out dir costs no failed read and
+an unreadable table raises instead of reading as empty. Parquet pages are
+read with ``schemas.PAGES``, checked once per run against one input
+footer on the driver, instead of a schema-inference job.
 
 Reference parity note: the reference has no incremental machinery at all
 (SURVEY.md §2.7); this module is the Spark-native capability the north rule
@@ -33,12 +42,18 @@ adds.
 
 from __future__ import annotations
 
+import json
+import time
+import uuid
 import zlib
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from functools import reduce
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
 from docling_ibm_models_spark import schemas
@@ -66,6 +81,13 @@ class RunReport:
     partitions_processed: int
     docs_processed: int
     chunks: int
+    chunk_wall_s: list[float] = field(default_factory=list)  # one per committed chunk
+
+
+def _hadoop_path(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` of ``path`` on the driver's Hadoop config."""
+    jvm_path = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jvm_path.getFileSystem(spark._jsc.hadoopConfiguration()), jvm_path
 
 
 def list_file_groups(
@@ -81,8 +103,7 @@ def list_file_groups(
     writer, so round-robin keeps groups even). ``suffix`` selects the data
     files (``.parquet`` for lake tables, ``.warc``/``.warc.gz`` for raw
     crawl archives)."""
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path(input_path)
-    fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, jvm_path = _hadoop_path(spark, input_path)
     files = sorted(
         str(f.getPath())
         for f in fs.listStatus(jvm_path)
@@ -95,20 +116,61 @@ def list_file_groups(
 
 
 def _append_rows(spark: SparkSession, rows: list[tuple], schema: StructType, path: str) -> None:
-    """Append ``rows`` to the parquet table at ``path``. The rows are
-    literals in a one-partition JVM-side plan: ``spark.createDataFrame`` of
-    a list would plan a pickled Python RDD run by ``defaultParallelism``
-    Python tasks."""
-    structs = [
-        F.struct(*[F.lit(v).cast(f.dataType).alias(f.name) for v, f in zip(row, schema.fields)])
-        for row in rows
-    ]
-    (
-        spark.range(0, 1, 1, 1)
-        .select(F.inline(F.array(*structs)))
-        .write.mode("append")
-        .parquet(path)
+    """Append ``rows`` to the parquet table at ``path`` as one new file,
+    written by the driver (no Spark job): serialized with pyarrow, put
+    under a hidden ``_tmp-`` name, then renamed into place."""
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.fieldNames(), row)) for row in rows], schema=to_arrow_schema(schema)
     )
+    sink = pa.BufferOutputStream()
+    pq.write_table(table, sink)
+    fs, table_dir = _hadoop_path(spark, path)
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    name = uuid.uuid4()
+    tmp = Path(table_dir, f"_tmp-{name}.parquet")
+    out = fs.create(tmp, False)
+    try:
+        out.write(sink.getvalue().to_pybytes())
+    finally:
+        out.close()
+    if not fs.rename(tmp, Path(table_dir, f"part-{name}.parquet")):
+        raise OSError(f"could not rename {tmp} into place under {path}")
+
+
+def _exists(spark: SparkSession, path: str) -> bool:
+    fs, jvm_path = _hadoop_path(spark, path)
+    return fs.exists(jvm_path)
+
+
+def _footer_schema(spark: SparkSession, path: str) -> StructType:
+    """The Spark schema of one parquet file, read from its footer on the
+    driver (no Spark job) with the session's type-mapping settings."""
+    jvm = spark._jvm
+    footer = jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter(
+        spark._jsc.hadoopConfiguration(), jvm.org.apache.hadoop.fs.Path(path)
+    )
+    converter = jvm.org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter(
+        spark._jsparkSession.sessionState().conf()
+    )
+    return StructType.fromJson(
+        json.loads(converter.convert(footer.getFileMetaData().getSchema()).json())
+    )
+
+
+def _check_pages_footer(spark: SparkSession, path: str) -> None:
+    """Refuse a pages file whose columns do not carry ``schemas.PAGES``'s
+    names and types. Pages are read with that schema; this one footer read
+    replaces Spark's schema inference, which also reads one footer but as
+    a Spark job."""
+    types = {f.name: f.dataType for f in _footer_schema(spark, path).fields}
+    for f in schemas.PAGES.fields:
+        if f.name not in types:
+            raise ValueError(f"pages file {path} has no column {f.name!r} (schemas.PAGES)")
+        if types[f.name] != f.dataType:
+            raise ValueError(
+                f"pages column {f.name!r} in {path} is {types[f.name].simpleString()}, "
+                f"schemas.PAGES has {f.dataType.simpleString()}"
+            )
 
 
 def _check_snapshot_manifest(
@@ -131,13 +193,12 @@ def _check_snapshot_manifest(
     # out_dir re-pins on the next run instead of silently mixing schemas
     # in one directory or false-alarming on the changed fingerprint basis.
     path = f"{out_dir}/_manifest_v2"
-    try:
+    prev = {}
+    if _exists(spark, path):
         prev = {
             r.snapshot_id: (r.fingerprint, r.num_groups)
             for r in spark.read.schema(_MANIFEST).parquet(path).collect()
         }
-    except Exception:
-        prev = {}
     if snapshot_id in prev:
         prev_fp, prev_ng = prev[snapshot_id]
         if prev_fp != fingerprint:
@@ -157,10 +218,10 @@ def _check_snapshot_manifest(
 
 
 def committed_partitions(spark: SparkSession, out_dir: str, snapshot_id: int) -> set[int]:
-    try:
-        lin = spark.read.schema(schemas.LINEAGE).parquet(f"{out_dir}/lineage")
-    except Exception:
+    path = f"{out_dir}/lineage"
+    if not _exists(spark, path):
         return set()
+    lin = spark.read.schema(schemas.LINEAGE).parquet(path)
     # one row per committed chunk partition: a plain collect, no shuffle
     rows = (
         lin.filter(
@@ -203,20 +264,15 @@ def run_extraction(
     elif input_format == "parquet":
         suffix = ".parquet"
 
-        pages_schema: StructType | None = None
-
         def read_group(files: list[str]) -> DataFrame:
-            # the schema is inferred once per run: inference runs a
-            # footer-reading Spark job per read
-            nonlocal pages_schema
-            if pages_schema is None:
-                pages_schema = spark.read.parquet(*files).schema
-            return spark.read.schema(pages_schema).parquet(*files)
+            return spark.read.schema(schemas.PAGES).parquet(*files)
 
     else:
         raise ValueError(f"unknown input_format {input_format!r}")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     groups = list_file_groups(spark, pages_path, num_partitions, suffix=suffix)
+    if input_format == "parquet" and groups[0]:
+        _check_pages_footer(spark, groups[0][0])
     _check_snapshot_manifest(spark, out_dir, snapshot_id, groups)
     num_groups = len(groups)
     chunk_partitions = chunk_partitions or num_groups
@@ -230,7 +286,9 @@ def run_extraction(
 
     docs_processed = 0
     processed_parts = 0
+    chunk_wall_s = []
     for chunk in chunks:
+        t0 = time.perf_counter()
         # one scan per group (narrow, file-pruned), unioned into one write
         # job. The write is a result stage: Spark applies a result task's
         # accumulator update once per partition and drops the updates of
@@ -253,6 +311,7 @@ def run_extraction(
         _append_rows(spark, rows, schemas.LINEAGE, f"{out_dir}/lineage")
         docs_processed += sum(r[2] for r in rows)
         processed_parts += len(chunk)
+        chunk_wall_s.append(time.perf_counter() - t0)
 
     return RunReport(
         snapshot_id=snapshot_id,
@@ -261,6 +320,7 @@ def run_extraction(
         partitions_processed=processed_parts,
         docs_processed=docs_processed,
         chunks=len(chunks),
+        chunk_wall_s=chunk_wall_s,
     )
 
 

@@ -3,19 +3,29 @@
 
 from __future__ import annotations
 
+import contextlib
 import re
+import uuid
 
 import duckdb
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
+from docling_ibm_models_spark import schemas
 from docling_ibm_models_spark.functions.html_extract import (
     extract_main_content,
     normalize_text,
 )
 from docling_ibm_models_spark.pipeline.extract import doc_text_clean, extract_doc_text
 from docling_ibm_models_spark.pipeline.lineage import (
+    _append_rows,
+    _footer_schema,
     committed_partitions,
+    read_incremental,
     run_extraction,
     snapshot_id_for,
 )
@@ -121,40 +131,116 @@ def test_lineage_and_resume(spark, tmp_path):
 
 # jobs of one 8-group chunk into a fresh out dir before the one-job commit:
 # a Python-RDD manifest write, 8 schema inferences, the doc_text write over
-# a cached chunk, 3 jobs for the lineage aggregate and 2 for its write
+# a cached chunk, 3 jobs for the lineage aggregate and 2 for its write. Now
+# the only job is the doc_text write: the driver checks the pages footer
+# and writes the manifest and lineage files itself.
 _JOBS_PER_CHUNK_BEFORE = 15
 _PYTHON_STAGE = re.compile(r"PythonRDD|MapInArrow|MapInPandas|EvalPython")
 
 
-def test_one_chunk_commit_runs_one_python_job(spark, tmp_path):
-    """A chunk is one write job that runs the kernel; the manifest write,
-    the schema inference and the lineage append run no Python worker."""
-    pages_path = str(tmp_path / "pages")
-    pages_from_documents(spark, SF_SMALL, parallelism=8).write.parquet(pages_path)
-    sc = spark.sparkContext
-    sc.setJobGroup("one_chunk", "one_chunk")
+@contextlib.contextmanager
+def _job_group(sc, name):
+    """Tag the jobs started inside the block with job group ``name``."""
+    sc.setJobGroup(name, name)
     try:
-        run_extraction(spark, pages_path, str(tmp_path / "out"), snapshot_id_for("one"),
-                       num_partitions=8)
+        yield
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the status store is fed asynchronously
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # the status store is fed asynchronously
+
+
+def test_one_chunk_commit_runs_one_python_job(spark, tmp_path):
+    """A chunk commit is exactly one Spark job, the kernel's doc_text
+    write; the footer check and the manifest and lineage appends run on the
+    driver."""
+    pages_path = str(tmp_path / "pages")
+    pages_from_documents(spark, SF_SMALL, parallelism=8).write.parquet(pages_path)
+    sc = spark.sparkContext
+    with _job_group(sc, "one_chunk"):
+        report = run_extraction(spark, pages_path, str(tmp_path / "out"),
+                                snapshot_id_for("one"), num_partitions=8)
     jobs = sc.statusTracker().getJobIdsForGroup("one_chunk")
-    # manifest write, one schema inference, doc_text write, lineage write
-    assert len(jobs) == 4 < _JOBS_PER_CHUNK_BEFORE
+    assert len(jobs) == 1 < _JOBS_PER_CHUNK_BEFORE
+    assert report.chunks == len(report.chunk_wall_s) == 1 and report.chunk_wall_s[0] > 0
 
     store = sc._jsc.sc().statusStore()
     graph = sc._jvm.org.apache.spark.ui.scope.RDDOperationGraph
     stages = [
         str(graph.makeDotFile(store.operationGraphForStage(s)))
-        for j in jobs
-        for s in sc.statusTracker().getJobInfo(j).stageIds
+        for s in sc.statusTracker().getJobInfo(jobs[0]).stageIds
     ]
-    writes = [d for d in stages if "WriteFiles" in d]
-    python = [d for d in writes if _PYTHON_STAGE.search(d)]
-    assert len(writes) == 3 and len(python) == 1
-    assert "MapInArrow" in python[0]
+    assert len(stages) == 1
+    assert "WriteFiles" in stages[0] and "MapInArrow" in stages[0]
+    assert set(_PYTHON_STAGE.findall(stages[0])) == {"MapInArrow"}
+
+
+def test_pages_footer_mismatch_raises_before_any_job(spark, tmp_path):
+    """Pages are read with ``schemas.PAGES``: a pages table whose ``html``
+    is a string is refused from its footer before any Spark job runs or
+    anything is written."""
+    pages_path = str(tmp_path / "pages")
+    out_dir = tmp_path / "out"
+    (
+        pages_from_documents(spark, SF_SMALL, parallelism=2)
+        .withColumn("html", F.col("html").cast("string"))
+        .write.parquet(pages_path)
+    )
+    sc = spark.sparkContext
+    with _job_group(sc, "footer_mismatch"):
+        with pytest.raises(ValueError, match="'html'.*string.*binary"):
+            run_extraction(spark, pages_path, str(out_dir), snapshot_id_for("footer"),
+                           num_partitions=2)
+    assert list(sc.statusTracker().getJobIdsForGroup("footer_mismatch")) == []
+    assert not out_dir.exists()
+
+
+def test_driver_written_lineage_file_has_lineage_schema(spark, tmp_path):
+    """A lineage append is one renamed parquet file whose footer carries
+    exactly ``schemas.LINEAGE`` (names, types, non-null fields)."""
+    path = str(tmp_path / "lineage")
+    _append_rows(spark, [(7, 3, 12, 0.5, "committed")], schemas.LINEAGE, path)
+    files = sorted(p.name for p in (tmp_path / "lineage").iterdir() if p.suffix == ".parquet")
+    assert len(files) == 1 and files[0].startswith("part-")
+    assert _footer_schema(spark, f"{path}/{files[0]}") == schemas.LINEAGE
+    assert spark.read.schema(schemas.LINEAGE).parquet(path).collect() == [
+        (7, 3, 12, 0.5, "committed")
+    ]
+
+
+def test_unrenamed_lineage_file_is_not_committed(spark, tmp_path):
+    """A crash between writing a lineage file and renaming it into place
+    leaves a hidden ``_tmp-`` file: its rows are not committed, readers
+    ignore it, and a resume re-processes its chunk."""
+    pages_path = str(tmp_path / "pages")
+    out_dir = str(tmp_path / "out")
+    pages_from_documents(spark, SF_SMALL, parallelism=4).write.parquet(pages_path)
+    snap = snapshot_id_for("crash-before-rename")
+    stray = pa.Table.from_pylist(
+        [
+            {"snapshot_id": snap, "partition_id": g, "doc_count": 1, "wall_s": 0.1,
+             "status": "committed"}
+            for g in (2, 3)
+        ],
+        schema=to_arrow_schema(schemas.LINEAGE),
+    )
+    (tmp_path / "out" / "lineage").mkdir(parents=True)
+    pq.write_table(stray, f"{out_dir}/lineage/_tmp-{uuid.uuid4()}.parquet")
+    # the stray file alone: lineage/ exists but holds no committed row
+    assert committed_partitions(spark, out_dir, snap) == set()
+
+    r1 = run_extraction(spark, pages_path, out_dir, snap, num_partitions=4,
+                        chunk_partitions=2, max_chunks=1)
+    assert r1.partitions_done_before == 0 and r1.partitions_processed == 2
+    assert committed_partitions(spark, out_dir, snap) == {0, 1}
+    df, seen = read_incremental(spark, out_dir, snap, set())
+    assert seen == {0, 1}
+    assert {r.partition_id for r in df.select("partition_id").distinct().collect()} == {0, 1}
+
+    r2 = run_extraction(spark, pages_path, out_dir, snap, num_partitions=4, chunk_partitions=2)
+    assert r2.partitions_done_before == 2 and r2.partitions_processed == 2
+    assert committed_partitions(spark, out_dir, snap) == {0, 1, 2, 3}
+    assert spark.read.parquet(f"{out_dir}/doc_text").count() == 500
 
 
 def test_idempotent_rerun_partition_overwrite(spark, tmp_path):
@@ -188,6 +274,22 @@ def test_snapshot_drift_guard(spark, tmp_path):
         run_extraction(spark, pages_path, out_dir, snap, num_partitions=4)
     # a fresh snapshot id over the new file set is fine
     run_extraction(spark, pages_path, out_dir, snap + 7, num_partitions=4)
+
+
+def test_corrupt_manifest_raises(spark, tmp_path):
+    """An unreadable ``_manifest_v2`` must fail the run, not read as empty
+    and silently re-pin the snapshot under a different partitioning."""
+    out_dir = tmp_path / "out"
+    pages_path = str(tmp_path / "pages")
+    pages_from_documents(spark, SF_SMALL, parallelism=4).write.parquet(pages_path)
+    snap = snapshot_id_for("corrupt-manifest")
+    run_extraction(spark, pages_path, str(out_dir), snap, num_partitions=2, max_chunks=0)
+    manifest = [p for p in (out_dir / "_manifest_v2").iterdir() if p.suffix == ".parquet"]
+    assert len(manifest) == 1
+    manifest[0].write_bytes(b"this is not a parquet file")
+    (manifest[0].parent / f".{manifest[0].name}.crc").unlink(missing_ok=True)
+    with pytest.raises(Py4JJavaError, match="FAILED_READ_FILE.*_manifest_v2"):
+        run_extraction(spark, pages_path, str(out_dir), snap, num_partitions=4)
 
 
 def test_snapshot_partitioning_change_guard(spark, tmp_path):
