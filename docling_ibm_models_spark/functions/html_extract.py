@@ -22,7 +22,7 @@ The reference's analogous surface is the layout-label blacklist filter
 here DOM structure substitutes for geometry.
 
 Pure functions only — no Spark imports. The Spark layer wraps
-:func:`extract_main_content` in an Arrow-batched ``mapInPandas`` stage
+:func:`extract_main_content` in an Arrow-batched ``mapInArrow`` stage
 (pipeline/extract.py); nothing in this module runs per-row at the JVM
 boundary.
 """
@@ -531,8 +531,10 @@ def _scan_blocks(html: str) -> list[Block]:
 
 def _scan_blocks_dispatch(html: str) -> list[Block]:
     """Event-dispatch twin of ``_scan_blocks``: feed ``_scan_events`` into
-    the ``_BlockParser`` state machine. Kept as the differential-testing
-    middle rung (fast inline loop ≡ this ≡ stdlib-parser path)."""
+    the ``_BlockParser`` state machine. Kept as the differential reference
+    for the fast inline loop (tests/test_extract_properties.py asserts
+    identical blocks). It is not equivalent to the stdlib-parser path,
+    whose tokenizer splits malformed markup differently."""
     p = _BlockParser()
     has_amp = "&" in html
     unescape = _unescape if has_amp else None
@@ -622,7 +624,9 @@ def extract_main_content(html: bytes | str) -> tuple[str, list[tuple[int, int, s
     """bytes/str HTML → (main-content text, spans). Deterministic, pure.
 
     Uses the fast regex scanner; any scanner failure falls back to the
-    stdlib-parser path (identical block semantics, slower)."""
+    stdlib-parser path (the same block state machine behind a different
+    tokenizer, so malformed markup such as ``'<td<table>x'`` may segment
+    differently)."""
     if html is None:
         return "", []
     if isinstance(html, (bytes, bytearray)):
@@ -635,8 +639,8 @@ def extract_main_content(html: bytes | str) -> tuple[str, list[tuple[int, int, s
 
 
 def extract_blocks_stdlib(html: str) -> list[Block]:
-    """Reference-grade slow path: stdlib HTMLParser drive of the same state
-    machine. Kept for differential testing of the fast scanner."""
+    """Slow path: stdlib HTMLParser drive of the same state machine, used
+    by :func:`extract_main_content` only when the fast scanner raises."""
     parser = _BlockParser()
     try:
         parser.feed(html)

@@ -33,9 +33,7 @@ from __future__ import annotations
 
 import functools
 import time
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark import Accumulator, AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -169,35 +167,6 @@ def _extract_batches_arrow(batches, stats: Accumulator | None = None):
         yield out
 
 
-def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Arrow-batched extraction kernel (pandas twin of
-    ``_extract_batches_arrow``, kept for differential testing)."""
-    for pdf in batches:
-        if not len(pdf):
-            continue
-        out = {
-            "url": pdf["url"].tolist(),
-            "lang": pdf["lang"].tolist(),
-            "extracted_text": [],
-            "n_blocks": [],
-            "n_chars": [],
-            "spans": [],
-            "partition_id": pdf["partition_id"].tolist(),
-        }
-        for html in pdf["html"]:
-            text, spans = extract_main_content(html)
-            out["extracted_text"].append(text)
-            out["n_blocks"].append(len(spans))
-            out["n_chars"].append(len(text))
-            out["spans"].append(
-                [
-                    {"start": s, "end": e, "label": lbl, "block_idx": i}
-                    for s, e, lbl, i in spans
-                ]
-            )
-        yield pd.DataFrame(out)
-
-
 def extract_doc_text(
     pages: DataFrame,
     num_partitions: int | None = None,
@@ -224,21 +193,6 @@ def extract_doc_text(
     if stats is not None:
         kernel = functools.partial(_extract_batches_arrow, stats=stats)
     return pruned.mapInArrow(kernel, schema=schemas.DOC_TEXT)
-
-
-def extract_doc_text_pandas(
-    pages: DataFrame,
-    num_partitions: int | None = None,
-    partition_id: int | None = None,
-) -> DataFrame:
-    """mapInPandas twin of :func:`extract_doc_text` — differential-testing
-    rung only (identical rows asserted in tests/test_extraction.py)."""
-    if num_partitions is not None:
-        salted = salt_partition(pages, num_partitions)
-    else:
-        salted = pages.withColumn("partition_id", F.lit(int(partition_id or 0)))
-    pruned = salted.select("url", "lang", "html", "partition_id")
-    return pruned.mapInPandas(_extract_batches, schema=schemas.DOC_TEXT)
 
 
 def doc_text_clean(extracted: DataFrame) -> DataFrame:

@@ -526,11 +526,10 @@ def events_salted_agg(spark, sf_dir):
     """,
 )
 def events_click_purchase_join(spark, sf_dir):
-    """Batch twin of the watermarked stream-stream attribution join
-    (streaming/stream_join.py): purchases joined to the same user's clicks
-    within the preceding 30 minutes — an event-time range join on the
-    user_id equi-key (one shuffle; the range condition prunes inside each
-    key group, and in the streaming form bounds the state store)."""
+    """Click-to-purchase attribution: purchases joined to the same user's
+    clicks within the preceding 30 minutes — an event-time range join on
+    the user_id equi-key (one shuffle; the range condition prunes inside
+    each key group)."""
     ev = _t(spark, sf_dir, "events").withColumn(
         "ts", F.col("ts").cast("timestamp")
     )
@@ -5706,10 +5705,10 @@ def corpus_incremental_dedup(spark, sf_dir):
     groupBy(hash) keep-min. Both shuffles key on content_hash, so AQE
     reuses one exchange. At scale the anti-join's history side is first
     reduced by a bloom/IN-filter pushed to the batch scan (Spark's
-    runtime row-group filtering); the hash table itself lives bucketed by
-    content_hash (pipeline/bucketing.py) making the anti-join
-    shuffle-free on the history side. [engine addition: incremental
-    crawl ingestion]"""
+    runtime row-group filtering); the hash table itself can live bucketed
+    by content_hash (a catalog table written with ``bucketBy``), making
+    the anti-join shuffle-free on the history side. [engine addition:
+    incremental crawl ingestion]"""
     docs = _t(spark, sf_dir, "documents")
     hashed = docs.select(
         "doc_id",
@@ -6310,8 +6309,9 @@ def crawl_snapshot_diff(spark, sf_dir):
     mutates every third doc's content) with the identical formula in both
     dialects. At 10^12 rows: one url-hash shuffle per side into a
     sort-merge full-outer join — the canonical diff plan; at scale both
-    snapshots are url-bucketed lake tables and the join goes
-    Exchange-free (pipeline/bucketing.py evidence). [engine addition]"""
+    snapshots are url-bucketed lake tables (``bucketBy`` on url, equal
+    bucket counts) and the join goes Exchange-free. [engine
+    addition]"""
     d = _t(spark, sf_dir, "documents")
     a = d.where(F.col("doc_id") % 10 != 0).select(
         _url_col().alias("url"), F.md5(F.col("text")).alias("h_a")

@@ -69,8 +69,7 @@ def test_compact_carries_sidecars_and_recovers(spark, tmp_path):
     survive compaction; an interrupted swap is repaired on the next run."""
     import os
 
-    from docling_ibm_models_spark.pipeline import atomic_dir
-    from docling_ibm_models_spark.pipeline.compaction import compact_parquet_dir
+    from docling_ibm_models_spark.pipeline.compaction import _recover, compact_parquet_dir
 
     path = str(tmp_path / "lake")
     df = spark.range(0, 2000).selectExpr("id", "id * 2 AS v")
@@ -87,6 +86,6 @@ def test_compact_carries_sidecars_and_recovers(spark, tmp_path):
     # simulate a hard crash between the two commit renames
     os.rename(path, path + ".compact_bak")
     assert not os.path.exists(path)
-    assert atomic_dir.recover(path, "compact") is True
+    assert _recover(path, "compact") is True
     assert spark.read.parquet(path).count() == 2000
     assert os.path.exists(os.path.join(path, "_manifest_v2", "chunk-0.json"))

@@ -353,13 +353,17 @@ def test_incremental_read_consumes_only_new_partitions(spark, tmp_path):
     assert urls1 | urls2 == all_urls
 
 
-def test_arrow_and_pandas_extraction_identical(spark):
-    """The mapInArrow production path and the mapInPandas twin must emit
-    identical rows (incl. the nested spans column) — the Arrow kernel
-    builds spans natively from flat arrays, so this pins its offsets."""
-    from docling_ibm_models_spark.pipeline.extract import extract_doc_text_pandas
-
+def test_arrow_extraction_matches_driver_reference(spark):
+    """Every mapInArrow row equals ``extract_main_content`` run on the
+    driver over the same html — incl. the nested spans column, which the
+    Arrow kernel builds natively from flat offset arrays, so this pins its
+    offsets."""
     pages = pages_from_documents(spark, SF_SMALL)
-    a = doc_text_clean(extract_doc_text(pages)).orderBy("url").collect()
-    b = doc_text_clean(extract_doc_text_pandas(pages)).orderBy("url").collect()
-    assert a == b
+    html_by_url = {r.url: bytes(r.html) for r in pages.select("url", "html").collect()}
+    rows = doc_text_clean(extract_doc_text(pages)).collect()
+    assert sorted(r.url for r in rows) == sorted(html_by_url)
+    for r in rows:
+        text, spans = extract_main_content(html_by_url[r.url])
+        got_spans = [(s.start, s.end, s.label, s.block_idx) for s in r.spans]
+        assert (r.extracted_text, got_spans) == (text, spans), r.url
+        assert (r.n_blocks, r.n_chars) == (len(spans), len(text)), r.url

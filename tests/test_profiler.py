@@ -79,23 +79,3 @@ def test_agg_window_semantics_match_reference():
 def test_resident_kb_positive_on_linux():
     assert resident_kb() > 1000  # this test process certainly exceeds 1 MB
 
-
-def test_mem_monitor_parity_with_reference():
-    """Same process, back-to-back reads: field sets identical, values within
-    noise; disabled/non-Linux sentinels identical."""
-    from docling_ibm_models.tableformer.utils.mem_monitor import (
-        MemMonitor as RefMonitor,
-    )
-
-    from docling_ibm_models_spark.functions.mem_monitor import MemMonitor
-
-    ref, ours = RefMonitor(), MemMonitor()
-    rm, om = ref.get_memory(), ours.get_memory()
-    assert set(rm) == set(om) == {"size", "resident", "shared", "text", "lib", "data", "dt"}
-    for k in ("size", "resident", "data"):
-        assert abs(rm[k] - om[k]) <= max(0.1 * rm[k], 2048), k  # kB, same process
-    assert rm["lib"] == om["lib"] == 0  # unused since Linux 2.6
-    rf, of = ref.get_memory_full(), ours.get_memory_full()
-    assert set(rf) == set(of)
-    assert abs(rf["VmRSS"] - of["VmRSS"]) <= max(0.1 * rf["VmRSS"], 2048)
-    assert RefMonitor(enable=False).get_memory() == MemMonitor(enable=False).get_memory() == -2

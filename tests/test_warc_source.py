@@ -233,45 +233,6 @@ def test_corrupt_tail_keeps_parsed_records(tmp_path):
     assert [r[0] for r in rows2] == [u for u, _, _ in _recs(4)]
 
 
-def test_stream_extract_warc_exactly_once_per_archive(spark, tmp_path):
-    """Archives land incrementally; each is parsed+extracted exactly once
-    (checkpointed binaryFile stream), output equals the batch path."""
-    from pyspark.sql import functions as F
-
-    from docling_ibm_models_spark.pipeline.extract import (
-        doc_text_clean,
-        extract_doc_text,
-    )
-    from docling_ibm_models_spark.sources.pages_source import pages_from_documents
-    from docling_ibm_models_spark.streaming.stream_extract import stream_extract_warc
-
-    warc_dir = tmp_path / "landing"
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(warc_dir)
-
-    pages = pages_from_documents(spark, SF_SMALL, parallelism=4, max_doc_id=120)
-    src = [
-        (r.url, r.warc_ts.replace(tzinfo=dt.timezone.utc), bytes(r.html), r.text)
-        for r in pages.collect()
-    ]
-    write_warc(str(warc_dir / "c0.warc.gz"), [(u, t, h) for u, t, h, _ in src[:40]])
-    write_warc(str(warc_dir / "c1.warc.gz"), [(u, t, h) for u, t, h, _ in src[40:80]])
-
-    stream_extract_warc(spark, str(warc_dir), out_dir, ckpt)
-    got1 = {r.url: r.extracted_text for r in spark.read.parquet(out_dir).collect()}
-    want = {u: t for u, _, _, t in src}
-    assert len(got1) == 80 and all(got1[u] == want[u] for u in got1)
-
-    # a third archive lands; re-run drains ONLY it
-    write_warc(str(warc_dir / "c2.warc.gz"), [(u, t, h) for u, t, h, _ in src[80:]])
-    stream_extract_warc(spark, str(warc_dir), out_dir, ckpt)
-    out = spark.read.parquet(out_dir)
-    assert out.count() == len(src)  # no re-processing of c0/c1
-    got2 = {r.url: r.extracted_text for r in out.collect()}
-    assert got2 == want  # byte-identical, streaming == batch ground truth
-
-
 def test_warc_round_trip_property():
     """Property: any (url, ts, body-bytes) list round-trips through every
     compression layout — including bodies containing WARC headers, CRLF
