@@ -9,11 +9,6 @@ import time
 
 sys.path.insert(0, "/root/reference")
 
-from docling_ibm_models.tableformer.utils.app_profiler import (  # noqa: E402
-    AggProfiler,
-    Profiler,
-)
-
 from docling_ibm_models_spark.functions.profiler import (  # noqa: E402
     AggSectionProfiler,
     SectionProfiler,
@@ -22,6 +17,8 @@ from docling_ibm_models_spark.functions.profiler import (  # noqa: E402
 
 
 def test_section_profiler_matches_reference_metrics():
+    from docling_ibm_models.tableformer.utils.app_profiler import Profiler
+
     pattern = [("a", 0.01), ("b", 0.02), ("a", 0.01)]
     # NEST the two profilers around the SAME sleeps: both then measure the
     # same wall interval (± context-manager overhead), so the dt tolerance
@@ -51,6 +48,8 @@ def test_section_profiler_matches_reference_metrics():
 
 
 def test_agg_window_semantics_match_reference():
+    from docling_ibm_models.tableformer.utils.app_profiler import AggProfiler
+
     # reference AggProfiler is a process-global singleton — drive it and
     # ours with identical cycles, compare windowing + aggregation structure
     ref = AggProfiler(window_size=3)
