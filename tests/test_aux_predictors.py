@@ -13,10 +13,6 @@ from .ref_import import install
 
 install()
 
-from docling_ibm_models.code_formula_model.code_formula_predictor import (  # noqa: E402
-    CodeFormulaPredictor,
-)
-
 
 class _Dummy:
     def _log(self):
@@ -27,6 +23,10 @@ REF = _Dummy()
 
 
 def test_strip_latex_tail_parity():
+    from docling_ibm_models.code_formula_model.code_formula_predictor import (
+        CodeFormulaPredictor,
+    )
+
     rng = random.Random(0)
     pieces = [r"\quad", r"\\", r"\,", " c c c c", " l l l l l", "x", " ", "abc"]
     for _ in range(300):
@@ -35,6 +35,10 @@ def test_strip_latex_tail_parity():
 
 
 def test_prompt_parity():
+    from docling_ibm_models.code_formula_model.code_formula_predictor import (
+        CodeFormulaPredictor,
+    )
+
     for label in ("code", "formula"):
         assert aux.build_prompt(label) == CodeFormulaPredictor._get_prompt(REF, label)
     with pytest.raises(NotImplementedError):

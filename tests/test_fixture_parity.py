@@ -21,7 +21,7 @@ from docling_ibm_models_spark.operators import cell_matcher as ours_cm  # noqa: 
 from docling_ibm_models_spark.operators import post_processor as ours_pp  # noqa: E402
 from docling_ibm_models_spark.operators import response_gen as ours_rg  # noqa: E402
 from .ref_import import import_tf_predictor  # noqa: E402
-from .test_matcher_parity import random_prediction  # noqa: E402
+from .seeded_inputs import random_prediction  # noqa: E402
 
 REF_PP = MatchingPostProcessor({"predict": {"pdf_cell_iou_thres": 0.05}})
 tfp = import_tf_predictor()

@@ -16,44 +16,9 @@ from docling_ibm_models.tableformer.data_management.tf_cell_matcher import (  # 
 )
 
 from docling_ibm_models_spark.operators import cell_matcher as ours  # noqa: E402
-from docling_ibm_models_spark.operators import otsl_ops  # noqa: E402
-from .test_otsl_parity import random_grid_table  # noqa: E402
+from .seeded_inputs import random_page, random_prediction  # noqa: E402
 
 REF = CellMatcher({"predict": {"pdf_cell_iou_thres": 0.05}})
-
-CELL_TAGS_SYNC = ("fcel", "ched", "rhed", "srow", "ecel")
-
-
-def random_prediction(rng: random.Random):
-    toks, empties = random_grid_table(rng)
-    tags = otsl_ops.html_to_otsl(toks, empties).tags
-    # relabel some anchors as header/section tags to exercise all cell tags
-    tags = [
-        rng.choice(["fcel", "ched", "rhed", "srow"]) if t == "fcel" and rng.random() < 0.3 else t
-        for t in tags
-    ]
-    html_seq = otsl_ops.otsl_to_html(tags)
-    n_bboxes = sum(1 for t in tags if t in CELL_TAGS_SYNC)
-    bboxes = []
-    for _ in range(n_bboxes):
-        x1, y1 = rng.uniform(0, 0.9), rng.uniform(0, 0.9)
-        bboxes.append([x1, y1, x1 + rng.uniform(0.01, 0.1), y1 + rng.uniform(0.01, 0.1)])
-    classes = [rng.randint(0, 2) for _ in range(n_bboxes)]
-    return {"rs_seq": tags, "html_seq": html_seq, "bboxes": bboxes, "classes": classes}
-
-
-def random_page(rng: random.Random, n_tokens: int):
-    tokens = []
-    for i in range(n_tokens):
-        x1, y1 = rng.uniform(0, 950), rng.uniform(0, 1150)
-        tokens.append(
-            {
-                "id": i,
-                "text": f"tok{i}",
-                "bbox": {"l": x1, "t": y1, "r": x1 + rng.uniform(5, 60), "b": y1 + rng.uniform(5, 20)},
-            }
-        )
-    return {"tokens": tokens, "width": 1000, "height": 1200}
 
 
 def test_intersection_parity_incl_guard_quirk():

@@ -16,56 +16,20 @@ import pytest
 
 sys.path.insert(0, "/root/reference")
 
-import docling_ibm_models.tableformer.otsl as ref_otsl  # noqa: E402
-
 from docling_ibm_models_spark.operators import otsl_ops  # noqa: E402
+from .seeded_inputs import random_grid_table  # noqa: E402
 
 VOCAB = ["fcel", "ecel", "ched", "rhed", "srow", "lcel", "ucel", "xcel"]
 
 
-def random_grid_table(rng: random.Random):
-    """Random well-formed spanned table → (structure_tokens, cell_empties)."""
-    R, C = rng.randint(1, 6), rng.randint(1, 6)
-    taken = [[False] * C for _ in range(R)]
-    per_row_cells: list[list[tuple[int, int, bool]]] = [[] for _ in range(R)]
-    for y in range(R):
-        for x in range(C):
-            if taken[y][x]:
-                continue
-            max_cs = 1
-            while x + max_cs < C and not taken[y][x + max_cs] and max_cs < 3:
-                max_cs += 1
-            cs = rng.randint(1, max_cs) if rng.random() < 0.4 else 1
-            max_rs = 1
-            while y + max_rs < R and all(
-                not taken[y + max_rs][xx] for xx in range(x, x + cs)
-            ) and max_rs < 3:
-                max_rs += 1
-            rs = rng.randint(1, max_rs) if rng.random() < 0.4 else 1
-            for yy in range(y, y + rs):
-                for xx in range(x, x + cs):
-                    taken[yy][xx] = True
-            per_row_cells[y].append((cs, rs, rng.random() < 0.2))
-    toks: list[str] = []
-    empties: list[bool] = []
-    for row in per_row_cells:
-        toks.append("<tr>")
-        for cs, rs, empty in row:
-            empties.append(empty)
-            if cs == 1 and rs == 1:
-                toks.extend(["<td>", "</td>"])
-            else:
-                toks.append("<td")
-                if cs > 1:
-                    toks.append(f' colspan="{cs}"')
-                if rs > 1:
-                    toks.append(f' rowspan="{rs}"')
-                toks.extend([">", "</td>"])
-        toks.append("</tr>")
-    return toks, empties
+@pytest.fixture(scope="module")
+def ref_otsl():
+    import docling_ibm_models.tableformer.otsl as ref_otsl
+
+    return ref_otsl
 
 
-def ref_html_to_otsl(structure_tokens, empties):
+def ref_html_to_otsl(ref_otsl, structure_tokens, empties):
     table = {
         "split": "t",
         "filename": "t",
@@ -94,10 +58,10 @@ def _has_2d_span(toks):
 
 
 @pytest.mark.parametrize("seed", range(40))
-def test_html_to_otsl_parity(seed):
+def test_html_to_otsl_parity(seed, ref_otsl):
     rng = random.Random(seed)
     toks, empties = random_grid_table(rng)
-    ref = ref_html_to_otsl(toks, empties)
+    ref = ref_html_to_otsl(ref_otsl, toks, empties)
     ours = otsl_ops.html_to_otsl(toks, empties)
     assert ours.cols == ref["cols"]
     assert ours.rows == ref["rows"]
@@ -107,7 +71,7 @@ def test_html_to_otsl_parity(seed):
 
 
 @pytest.mark.parametrize("seed", range(200))
-def test_html_to_otsl_ref_tag_stream_parity(seed):
+def test_html_to_otsl_ref_tag_stream_parity(seed, ref_otsl):
     """FULL tag-stream parity (incl. 2D-span tables where the reference's
     xcel cursor quirk corrupts the stream) via html_to_otsl_ref. When the
     quirk trips the reference's :359 guard (ok=False), ours returns None;
@@ -157,7 +121,7 @@ def test_quirk_divergence_pinned():
 
 
 @pytest.mark.parametrize("seed", range(40))
-def test_otsl_spans_inference_surface_parity(seed):
+def test_otsl_spans_inference_surface_parity(seed, ref_otsl):
     """The inference path (tf_cell_matcher.py:264-269) feeds otsl_to_html
     output back through html_to_otsl and reads ONLY otsl_spans. Our local
     span scan must match the reference byte-for-byte on that closed loop —
@@ -177,7 +141,7 @@ def test_otsl_spans_inference_surface_parity(seed):
 
 
 @pytest.mark.parametrize("seed", range(40))
-def test_otsl_to_html_parity_on_valid_tables(seed):
+def test_otsl_to_html_parity_on_valid_tables(seed, ref_otsl):
     rng = random.Random(1000 + seed)
     toks, empties = random_grid_table(rng)
     tags = otsl_ops.html_to_otsl(toks, empties).tags
@@ -185,7 +149,7 @@ def test_otsl_to_html_parity_on_valid_tables(seed):
 
 
 @pytest.mark.parametrize("seed", range(60))
-def test_otsl_to_html_parity_on_tag_soup(seed):
+def test_otsl_to_html_parity_on_tag_soup(seed, ref_otsl):
     """Adversarial: random tag soup incl. non-square and overlapping spans."""
     rng = random.Random(2000 + seed)
     tags = []
@@ -196,7 +160,7 @@ def test_otsl_to_html_parity_on_tag_soup(seed):
 
 
 @pytest.mark.parametrize("seed", range(20))
-def test_square_check_and_pad_parity(seed):
+def test_square_check_and_pad_parity(seed, ref_otsl):
     rng = random.Random(3000 + seed)
     tags = []
     for _ in range(rng.randint(1, 5)):
@@ -211,7 +175,7 @@ def test_square_check_and_pad_parity(seed):
     )
 
 
-def test_sync_check_parity():
+def test_sync_check_parity(ref_otsl):
     tags = ["fcel", "ecel", "lcel", "nl", "ucel", "ched", "srow", "nl"]
     for n in range(8):
         assert otsl_ops.tags_cells_in_sync(tags, n) == ref_otsl.otsl_tags_cells_sync_chk(
@@ -226,14 +190,14 @@ def test_sync_check_parity():
     ids=["two-space", "trailing-space", "zero-padded", "out-of-range",
          "no-leading-space", "rowspan-zero"],
 )
-def test_malformed_span_tokens_ignored_like_reference(attr):
+def test_malformed_span_tokens_ignored_like_reference(attr, ref_otsl):
     """Non-canonical span attribute tokens are dict-misses in the reference
     (otsl.py:267-309) — the cell parses as a plain fcel. Assert our ref
     variant matches the live reference byte-for-byte on such streams."""
     toks = ["<tr>", "<td", attr, ">", "</td>", "<td>", "</td>", "</tr>",
             "<tr>", "<td>", "</td>", "<td>", "</td>", "</tr>"]
     empties = [False] * 4
-    ref = ref_html_to_otsl(toks, empties)
+    ref = ref_html_to_otsl(ref_otsl, toks, empties)
     ours = otsl_ops.html_to_otsl_ref(toks, empties)
     assert ours is not None
     assert ours.tags == ref["html"]["structure"]["tokens"], attr

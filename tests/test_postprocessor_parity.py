@@ -17,7 +17,7 @@ from docling_ibm_models.tableformer.data_management.matching_post_processor impo
 
 from docling_ibm_models_spark.operators import cell_matcher as ours_cm  # noqa: E402
 from docling_ibm_models_spark.operators import post_processor as ours_pp  # noqa: E402
-from .test_matcher_parity import random_page, random_prediction  # noqa: E402
+from .seeded_inputs import random_page, random_prediction  # noqa: E402
 
 REF_PP = MatchingPostProcessor({"predict": {"pdf_cell_iou_thres": 0.05}})
 

@@ -13,10 +13,15 @@ import pytest
 from docling_ibm_models_spark.operators import cell_matcher as ours_cm
 from docling_ibm_models_spark.operators import post_processor as ours_pp
 from docling_ibm_models_spark.operators import response_gen as ours_rg
-from .ref_import import import_tf_predictor
-from .test_matcher_parity import random_page, random_prediction
+from .ref_import import import_tf_predictor, install
+from .seeded_inputs import random_page, random_prediction
 
-tfp = import_tf_predictor()
+install()
+
+
+@pytest.fixture(scope="module")
+def tfp():
+    return import_tf_predictor()
 
 
 class _DummySelf:
@@ -24,10 +29,10 @@ class _DummySelf:
         return logging.getLogger("dummy")
 
     def _deletebbox(self, bboxes, indexes):
-        return tfp.TFPredictor._deletebbox(self, bboxes, indexes)
+        return import_tf_predictor().TFPredictor._deletebbox(self, bboxes, indexes)
 
     def _remove_bbox_span_desync(self, prediction):
-        return tfp.TFPredictor._remove_bbox_span_desync(self, prediction)
+        return import_tf_predictor().TFPredictor._remove_bbox_span_desync(self, prediction)
 
 
 REF = _DummySelf()
@@ -42,7 +47,7 @@ def processed_details(seed):
 
 
 @pytest.mark.parametrize("seed", range(25))
-def test_generate_tf_response_parity(seed):
+def test_generate_tf_response_parity(seed, tfp):
     d = processed_details(60000 + seed)
     ref = tfp.TFPredictor._generate_tf_response(REF, d["table_cells"], d["matches"])
     got = ours_rg.generate_tf_response(d["table_cells"], d["matches"])
@@ -50,7 +55,7 @@ def test_generate_tf_response_parity(seed):
 
 
 @pytest.mark.parametrize("seed", range(25))
-def test_merge_tf_output_parity(seed):
+def test_merge_tf_output_parity(seed, tfp):
     d = processed_details(61000 + seed)
     docling_output = ours_rg.generate_tf_response(d["table_cells"], d["matches"])
     docling_output.sort(key=lambda c: c["cell_id"])
@@ -99,7 +104,7 @@ def test_compaction_parity(seed):
 
 
 @pytest.mark.parametrize("seed", range(20))
-def test_bbox_sync_and_desync_repair_parity(seed):
+def test_bbox_sync_and_desync_repair_parity(seed, tfp):
     rng = random.Random(63000 + seed)
     pred = random_prediction(rng)
     # randomly desync: add or remove a bbox
@@ -113,7 +118,7 @@ def test_bbox_sync_and_desync_repair_parity(seed):
 
 
 @pytest.mark.parametrize("seed", range(10))
-def test_coordinate_transforms_parity(seed):
+def test_coordinate_transforms_parity(seed, tfp):
     rng = random.Random(64000 + seed)
     table_bbox = [100.0, 200.0, 800.0, 900.0]
     for _ in range(20):
@@ -130,7 +135,7 @@ def test_coordinate_transforms_parity(seed):
 
 
 @pytest.mark.parametrize("seed", range(10))
-def test_dummy_path_parity(seed):
+def test_dummy_path_parity(seed, tfp):
     """predict_dummy path: match_cells_dummy + _generate_tf_response_dummy."""
     import sys
 
@@ -140,7 +145,6 @@ def test_dummy_path_parity(seed):
     )
 
     from docling_ibm_models_spark.operators import cell_matcher as ours_cm
-    from .test_matcher_parity import random_page, random_prediction
 
     rng = random.Random(70000 + seed)
     pred = random_prediction(rng)
@@ -157,7 +161,7 @@ def test_dummy_path_parity(seed):
     assert got_resp == ref_resp
 
 
-def test_resize_plan_and_bbox_scale_parity():
+def test_resize_plan_and_bbox_scale_parity(tfp):
     """P3 scale-factor semantics vs reference resize_img (cv2 faked; the
     mock records the dim argument) + multi_table_predict bbox scaling."""
     import numpy as np
