@@ -178,11 +178,10 @@ def _spread(
     return df
 
 
-def register(name: str, oracle: str | None = None):
+def register(name: str, oracle: str):
     def deco(fn):
         QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
+        ORACLES[name] = oracle
         return fn
 
     return deco

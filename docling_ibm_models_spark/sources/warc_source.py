@@ -2,23 +2,23 @@
 
 The engine's input table ``(url, warc_ts, html, ...)`` (BASELINE.json
 input_hint) is, in production, materialized from Common-Crawl-style WARC
-archives. This module closes that loop with public-spec-only code
-(ISO 28500 WARC/1.0/1.1; RFC 1952 gzip):
+archives; its extraction output maps onto CC's WET files (``conversion``
+records of plain text). Public-spec-only code (ISO 28500 WARC/1.0/1.1;
+RFC 1952 gzip). One writer, parser, Spark scan and archive sink serve
+both record kinds; a :class:`_Kind` holds only what differs.
 
-* :func:`write_warc` — deterministic WARC writer used by tests/benches to
-  synthesize archives from the synthetic pages rows (no external data).
-  Supports the three layouts seen in the wild: plain ``.warc``, one gzip
-  stream over the whole file, and Common Crawl's layout of one gzip
-  *member per record* (which is what makes CC archives seekable by CDX
-  offset).
+* :func:`write_warc` / :func:`write_wet` — deterministic writer used by
+  tests/benches, in the three layouts seen in the wild: plain, one gzip
+  stream, and Common Crawl's one gzip *member per record* (which is what
+  makes CC archives seekable by CDX offset).
 * :func:`iter_warc_records` — incremental parser: gzip members are
   decompressed one at a time with ``zlib.decompressobj`` and records are
   scanned from a rolling buffer, so peak memory is one record + one
   member, never the whole decompressed archive (~1 GB compressed CC files
   decompress 3-5x; holding that per task would blow a 4 GiB executor).
-* :func:`pages_from_warc` — ``spark.read.format("binaryFile")`` scan →
-  Arrow-batched parser (``mapInPandas``) → one row per HTTP *response*
-  record: ``(url, warc_ts, html, warc_file, warc_offset)``.
+* :func:`pages_from_warc` / :func:`text_from_wet` — ``binaryFile`` scan
+  → ``mapInPandas`` parse → one row per record with CDX-style provenance
+  ``(warc_file, warc_offset)``, which :func:`fetch_warc_bodies` seeks by.
 
 Scale notes (100 TB crawl ≈ 100k × 1 GB archives): WARC archives don't
 split — gzip members must be scanned sequentially — so ``binaryFile``'s
@@ -31,11 +31,18 @@ batches stay small even for million-record archives.
 
 from __future__ import annotations
 
+import collections
 import datetime as _dt
 import gzip as _gzip
+import hashlib
 import io as _io
+import itertools as _itertools
+import os
+import re as _re
+import tempfile
 import zlib as _zlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from typing import Any, NamedTuple
 
 import pandas as pd
 
@@ -47,21 +54,17 @@ _GZIP_MAGIC = b"\x1f\x8b"
 # no matter how many records one archive holds
 _CHUNK_ROWS = 2048
 
+# the three wild layouts; the archive sinks cycle through them by partition
+_LAYOUTS = ("record", "file", "none")
+
 
 # ---------------------------------------------------------------------------
-# writer (fixture producer)
+# record kinds: HTTP response (WARC) and conversion (WET)
 # ---------------------------------------------------------------------------
 
 
-def _warc_record(headers: list[tuple[str, str]], block: bytes) -> bytes:
-    head = b"WARC/1.0\r\n" + b"".join(
-        f"{k}: {v}".encode() + _CRLF
-        for k, v in [*headers, ("Content-Length", str(len(block)))]
-    )
-    return head + _CRLF + block + _CRLF + _CRLF
-
-
-def _http_response_block(html: bytes) -> bytes:
+def _http_response_block(html) -> bytes:
+    html = bytes(html)
     http_head = (
         b"HTTP/1.1 200 OK\r\n"
         b"Content-Type: text/html; charset=utf-8\r\n"
@@ -69,6 +72,133 @@ def _http_response_block(html: bytes) -> bytes:
         + _CRLF
     )
     return http_head + _CRLF + html
+
+
+_LANG_ATTR = _re.compile(rb'<html[^>]*\blang=["\']?([A-Za-z][A-Za-z-]{0,10})', _re.I)
+
+
+def _sniff_lang(html: bytes, http_head: bytes) -> str | None:
+    """lang from the <html lang=..> attribute of the first KB, falling back
+    to the HTTP Content-Language header. CC pipelines re-derive language
+    with a classifier downstream (this engine's lang_id query); the sniff
+    just carries the source's own claim into the input_hint `lang` column."""
+    m = _LANG_ATTR.search(html[:1024])
+    if m:
+        return m.group(1).decode("ascii").lower()
+    m2 = _re.search(rb"(?im)^content-language:\s*([A-Za-z-]+)", http_head)
+    return m2.group(1).decode("ascii").lower() if m2 else None
+
+
+def _http_response_columns(block: bytes) -> tuple[bytes, str | None]:
+    """``(html, lang)`` of an HTTP response block: the body follows the
+    first blank line."""
+    i = block.find(_HDR_END)
+    if i >= 0:
+        body = block[i + 4 :]
+    else:
+        i = block.find(b"\n\n")
+        body = block[i + 2 :] if i >= 0 else block
+    return body, _sniff_lang(body, block[: len(block) - len(body)])
+
+
+class _Kind(NamedTuple):
+    """What a record kind does not share with the other."""
+
+    warc_type: str  # WARC-Type of the payload records
+    content_type: str  # Content-Type of the payload records
+    info: bytes  # warcinfo block
+    ext: str  # archive file extension, before any ".gz"
+    encode: Callable[[Any], bytes]  # payload -> record block
+    decode: Callable[[bytes], tuple]  # record block -> payload columns
+    payload: str  # Spark DDL of the payload columns
+
+    @property
+    def schema(self) -> str:  # one scanned row
+        provenance = "warc_file string, warc_offset long"
+        return f"url string, warc_ts timestamp, {self.payload}, {provenance}"
+
+
+_RESPONSE = _Kind(
+    "response",
+    "application/http; msgtype=response",
+    b"software: docling-ibm-models-spark warc writer\r\nformat: WARC File Format 1.0\r\n",
+    ".warc",
+    _http_response_block,
+    _http_response_columns,
+    "html binary, lang string",
+)
+
+# WET: the extracted text is the whole block (UTF-8, no HTTP envelope)
+_CONVERSION = _Kind(
+    "conversion",
+    "text/plain",
+    b"software: docling-ibm-models-spark wet writer\r\n"
+    b"format: WARC File Format 1.0\r\n"
+    b"publisher: extraction pipeline (conversion records)\r\n",
+    ".warc.wet",
+    lambda text: str(text).encode("utf-8"),
+    lambda block: (block.decode("utf-8", errors="replace"),),
+    "extracted_text string",
+)
+
+PAGES_FROM_WARC_SCHEMA = _RESPONSE.schema
+TEXT_FROM_WET_SCHEMA = _CONVERSION.schema
+
+
+# ---------------------------------------------------------------------------
+# writer (fixture producer)
+# ---------------------------------------------------------------------------
+
+
+def _warc_record(
+    warc_type: str, url: str | None, ts: _dt.datetime, content_type: str, block: bytes
+) -> bytes:
+    # A NAIVE datetime is treated as already-UTC: astimezone() alone would
+    # interpret it as host-local time and silently shift WARC-Date by the
+    # host's UTC offset (Spark hands the archive sinks naive timestamps).
+    if ts.tzinfo is None:
+        ts = ts.replace(tzinfo=_dt.timezone.utc)
+    headers = [
+        ("WARC-Type", warc_type),
+        ("WARC-Target-URI", url),  # None: warcinfo names no target
+        ("WARC-Date", ts.astimezone(_dt.timezone.utc).strftime("%Y-%m-%dT%H:%M:%SZ")),
+        ("Content-Type", content_type),
+        ("Content-Length", str(len(block))),
+    ]
+    head = b"WARC/1.0\r\n" + b"".join(
+        f"{k}: {v}".encode() + _CRLF for k, v in headers if v is not None
+    )
+    return head + _CRLF + block + _CRLF + _CRLF
+
+
+def _gzip_member(records: list[bytes]) -> bytes:
+    buf = _io.BytesIO()
+    with _gzip.GzipFile(fileobj=buf, mode="wb", mtime=0) as gz:
+        for rec in records:
+            gz.write(rec)
+    return buf.getvalue()
+
+
+def _write_archive(kind: _Kind, path: str, records: list[tuple], compression: str) -> int:
+    """Write ``records`` = [(url, warc_ts, payload), ...] as ``kind``
+    records after one leading warcinfo record, in the ``compression``
+    layout of :func:`write_warc`; returns the record count."""
+    info_ts = (records[0][1] if records else _dt.datetime(2024, 1, 1, tzinfo=_dt.timezone.utc))
+    raw_records = [_warc_record("warcinfo", None, info_ts, "application/warc-fields", kind.info)]
+    for url, ts, payload in records:
+        raw_records.append(
+            _warc_record(kind.warc_type, url, ts, kind.content_type, kind.encode(payload))
+        )
+    with open(path, "wb") as f:
+        if compression == "record":
+            f.writelines(_gzip_member([rec]) for rec in raw_records)
+        elif compression == "file":
+            f.write(_gzip_member(raw_records))
+        elif compression == "none":
+            f.writelines(raw_records)
+        else:
+            raise ValueError(f"unknown compression {compression!r}")
+    return len(raw_records)
 
 
 def write_warc(
@@ -84,67 +214,18 @@ def write_warc(
     (including the leading warcinfo record). Deterministic in its inputs —
     no wall-clock reads; the warcinfo date reuses the first record's ts.
     """
-    info_ts = (records[0][1] if records else _dt.datetime(2024, 1, 1, tzinfo=_dt.timezone.utc))
-    info_block = b"software: docling-ibm-models-spark warc writer\r\nformat: WARC File Format 1.0\r\n"
-    raw_records = [
-        _warc_record(
-            [
-                ("WARC-Type", "warcinfo"),
-                ("WARC-Date", _iso(info_ts)),
-                ("Content-Type", "application/warc-fields"),
-            ],
-            info_block,
-        )
-    ]
-    for url, ts, html in records:
-        raw_records.append(
-            _warc_record(
-                [
-                    ("WARC-Type", "response"),
-                    ("WARC-Target-URI", url),
-                    ("WARC-Date", _iso(ts)),
-                    ("Content-Type", "application/http; msgtype=response"),
-                ],
-                _http_response_block(html),
-            )
-        )
-    _write_raw_records(path, raw_records, compression)
-    return len(raw_records)
+    return _write_archive(_RESPONSE, path, records, compression)
 
 
-def _write_raw_records(
-    path: str, raw_records: list[bytes], compression: str
-) -> None:
-    """Serialize already-framed WARC records under one of the three wild
-    layouts (shared by the WARC response writer and the WET writer)."""
-    with open(path, "wb") as f:
-        if compression == "record":
-            for rec in raw_records:
-                buf = _io.BytesIO()
-                with _gzip.GzipFile(fileobj=buf, mode="wb", mtime=0) as gz:
-                    gz.write(rec)
-                f.write(buf.getvalue())
-        elif compression == "file":
-            buf = _io.BytesIO()
-            with _gzip.GzipFile(fileobj=buf, mode="wb", mtime=0) as gz:
-                for rec in raw_records:
-                    gz.write(rec)
-            f.write(buf.getvalue())
-        elif compression == "none":
-            for rec in raw_records:
-                f.write(rec)
-        else:
-            raise ValueError(f"unknown compression {compression!r}")
-
-
-def _iso(ts: _dt.datetime) -> str:
-    # A NAIVE datetime is treated as already-UTC: astimezone() alone would
-    # interpret it as host-local time and silently shift WARC-Date by the
-    # host's UTC offset (ADVICE r4 — write_warc_archives guarded this, but
-    # direct write_warc callers were exposed).
-    if ts.tzinfo is None:
-        ts = ts.replace(tzinfo=_dt.timezone.utc)
-    return ts.astimezone(_dt.timezone.utc).strftime("%Y-%m-%dT%H:%M:%SZ")
+def write_wet(
+    path: str,
+    records: list[tuple[str, _dt.datetime, str]],
+    compression: str = "record",
+) -> int:
+    """Write ``records`` = [(url, warc_ts, extracted_text), ...] as a WET
+    file (WARC conversion records, text/plain blocks, UTF-8); layouts,
+    determinism and the returned count match :func:`write_warc`."""
+    return _write_archive(_CONVERSION, path, records, compression)
 
 
 # ---------------------------------------------------------------------------
@@ -158,14 +239,24 @@ def _iso(ts: _dt.datetime) -> str:
 _DECOMP_CHUNK = 4 << 20
 
 
+def _inflate(obj, data: bytes | memoryview) -> Iterator[bytes]:
+    """Decompress ``data`` with the gzip ``decompressobj`` ``obj`` in
+    bounded ``_DECOMP_CHUNK`` slices (``decompress(data, max_length)`` +
+    ``unconsumed_tail``), up to the end of the member — the property that
+    makes 1 GB CC archives parseable inside a small executor heap
+    regardless of member size. Raises ``zlib.error`` on a corrupt member."""
+    while data and not obj.eof:
+        out = obj.decompress(data, _DECOMP_CHUNK)
+        if out:
+            yield out
+        data = obj.unconsumed_tail
+
+
 def _iter_decompressed(raw: bytes) -> Iterator[tuple[bytes, int]]:
     """Yield (decompressed_chunk, compressed_offset_of_member). Plain input
     yields itself once at offset 0. Gzip input is walked member by member
-    (``decompressobj.unused_data`` marks the next member) in bounded
-    ``_DECOMP_CHUNK`` slices (``decompress(data, max_length)`` +
-    ``unconsumed_tail``) — the property that makes 1 GB CC archives
-    parseable inside a small executor heap regardless of member size.
-    A truncated/corrupt member (torn upload, bad disk block) stops the
+    (``decompressobj.unused_data`` marks the next member). A
+    truncated/corrupt member (torn upload, bad disk block) stops the
     walk: records already parsed survive, the damaged tail is dropped —
     a single bad archive must cost its tail, not the whole task."""
     if not raw.startswith(_GZIP_MAGIC):
@@ -176,23 +267,13 @@ def _iter_decompressed(raw: bytes) -> Iterator[tuple[bytes, int]]:
     view = memoryview(raw)
     while pos < n and raw[pos : pos + 2] == _GZIP_MAGIC:
         obj = _zlib.decompressobj(wbits=31)
-        feed: bytes | memoryview = view[pos:]
-        corrupt = False
-        while True:
-            try:
-                out = obj.decompress(feed, _DECOMP_CHUNK)
-            except _zlib.error:
-                corrupt = True
-                break
-            if out:
+        try:
+            for out in _inflate(obj, view[pos:]):
                 yield out, pos
-            if obj.eof:
-                break
-            feed = obj.unconsumed_tail
-            if not feed:
-                break  # truncated member: input exhausted before the trailer
-        if corrupt or not obj.eof:
-            break
+        except _zlib.error:
+            break  # corrupt member
+        if not obj.eof:
+            break  # truncated member: input exhausted before the trailer
         consumed = n - pos - len(obj.unused_data)
         if consumed <= 0:  # corrupt trailer: stop rather than spin
             break
@@ -207,8 +288,6 @@ def iter_warc_records(raw: bytes) -> Iterator[tuple[dict[str, str], bytes, int]]
     archives) or the plain-file byte offset for uncompressed input.
     Tolerates both CRLF and bare-LF header line endings.
     """
-    import collections
-
     is_gz = raw.startswith(_GZIP_MAGIC)
     buf = bytearray()
     # (decompressed_stream_pos, compressed_member_offset) marks: lets a
@@ -295,32 +374,6 @@ def _parse_one(
     return ("ok", headers, block, start, end)
 
 
-def _http_body(block: bytes) -> bytes:
-    """Split the HTTP response block: body follows the first blank line."""
-    i = block.find(_HDR_END)
-    if i >= 0:
-        return block[i + 4 :]
-    i = block.find(b"\n\n")
-    return block[i + 2 :] if i >= 0 else block
-
-
-import re as _re
-
-_LANG_ATTR = _re.compile(rb'<html[^>]*\blang=["\']?([A-Za-z][A-Za-z-]{0,10})', _re.I)
-
-
-def _sniff_lang(html: bytes, http_head: bytes) -> str | None:
-    """lang from the <html lang=..> attribute of the first KB, falling back
-    to the HTTP Content-Language header. CC pipelines re-derive language
-    with a classifier downstream (this engine's lang_id query); the sniff
-    just carries the source's own claim into the input_hint `lang` column."""
-    m = _LANG_ATTR.search(html[:1024])
-    if m:
-        return m.group(1).decode("ascii").lower()
-    m2 = _re.search(rb"(?im)^content-language:\s*([A-Za-z-]+)", http_head)
-    return m2.group(1).decode("ascii").lower() if m2 else None
-
-
 def _parse_warc_date(ts_raw: str | None) -> _dt.datetime | None:
     if not ts_raw:
         return None
@@ -334,18 +387,39 @@ def _parse_warc_date(ts_raw: str | None) -> _dt.datetime | None:
     return None
 
 
+def _record_fields(kind: _Kind, headers: dict[str, str], block: bytes) -> tuple:
+    """``(url, warc_ts, *payload columns)`` of one parsed record."""
+    url = headers.get("warc-target-uri", "")
+    return (url, _parse_warc_date(headers.get("warc-date")), *kind.decode(block))
+
+
+def _records_to_rows(kind: _Kind, name: str, raw: bytes) -> Iterator[tuple]:
+    for headers, block, offset in iter_warc_records(raw):
+        if headers.get("warc-type") == kind.warc_type:
+            yield (*_record_fields(kind, headers, block), name, offset)
+
+
 def warc_records_to_rows(
     name: str, raw: bytes
 ) -> Iterator[tuple[str, _dt.datetime | None, bytes, str | None, str, int]]:
     """All HTTP-response records of one archive as pages-shaped tuples
     ``(url, warc_ts, html, lang, warc_file, warc_offset)``."""
-    for headers, block, offset in iter_warc_records(raw):
-        if headers.get("warc-type") != "response":
-            continue
-        url = headers.get("warc-target-uri", "")
-        ts = _parse_warc_date(headers.get("warc-date"))
-        body = _http_body(block)
-        yield url, ts, body, _sniff_lang(body, block[: len(block) - len(body)]), name, offset
+    return _records_to_rows(_RESPONSE, name, raw)
+
+
+def wet_records_to_rows(
+    name: str, raw: bytes
+) -> Iterator[tuple[str, _dt.datetime | None, str, str, int]]:
+    """All conversion records of one WET archive as extraction-output-shaped
+    tuples ``(url, warc_ts, extracted_text, warc_file, warc_offset)``."""
+    return _records_to_rows(_CONVERSION, name, raw)
+
+
+def _frames(rows: Iterator[tuple], schema: str) -> Iterator[pd.DataFrame]:
+    """``rows`` as pandas frames of at most ``_CHUNK_ROWS`` rows."""
+    cols = [field.split()[0] for field in schema.split(",")]
+    while chunk := list(_itertools.islice(rows, _CHUNK_ROWS)):
+        yield pd.DataFrame(chunk, columns=cols)
 
 
 # ---------------------------------------------------------------------------
@@ -377,54 +451,35 @@ def _read_record_from(f, offset: int, chunk: int = _FETCH_CHUNK):
     member offsets in the first place.
     """
     f.seek(offset)
-    first = f.read(max(chunk, 4))
-    if len(first) < 4:
+    data = f.read(max(chunk, 4))
+    if len(data) < 4:
         raise ValueError(f"offset {offset}: past end of archive")
-    bytes_read = len(first)
+    gz = _zlib.decompressobj(wbits=31) if data.startswith(_GZIP_MAGIC) else None
+    if gz is None and not data.startswith(b"WARC/"):
+        raise ValueError(f"offset {offset}: not a record start")
     buf = bytearray()
-    if first.startswith(_GZIP_MAGIC):
-        obj = _zlib.decompressobj(wbits=31)
-        pending: bytes = first
-        while True:
-            while pending:
-                buf += obj.decompress(pending, _DECOMP_CHUNK)
-                if len(buf) > _MAX_FETCH_RECORD:
-                    raise ValueError(f"offset {offset}: record exceeds fetch cap")
-                if obj.eof:
-                    break
-                pending = obj.unconsumed_tail
-            got = _parse_one(buf)
-            if got is not None and got[0] == "ok":
-                _, headers, block, start, _ = got
-                if start != 0:
-                    raise ValueError(f"offset {offset}: not a record start")
-                return headers, block, bytes_read
-            if got is not None and got[0] == "bad":
-                raise ValueError(f"offset {offset}: unparseable record header")
-            if obj.eof:
-                raise ValueError(f"offset {offset}: member ended mid-record")
-            pending = f.read(chunk)
-            if not pending:
-                raise ValueError(f"offset {offset}: archive truncated")
-            bytes_read += len(pending)
-    else:
-        buf += first
-        if not buf.startswith(b"WARC/"):
-            raise ValueError(f"offset {offset}: not a record start")
-        while True:
-            got = _parse_one(buf)
-            if got is not None and got[0] == "ok":
-                _, headers, block, start, _ = got
-                return headers, block, bytes_read
-            if got is not None and got[0] == "bad":
-                raise ValueError(f"offset {offset}: unparseable record header")
+    bytes_read = 0
+    while True:
+        bytes_read += len(data)
+        # the feed step is all that differs: a gzip member inflates up to
+        # its end, plain bytes append as read
+        for piece in (data,) if gz is None else _inflate(gz, data):
+            buf += piece
             if len(buf) > _MAX_FETCH_RECORD:
                 raise ValueError(f"offset {offset}: record exceeds fetch cap")
-            data = f.read(chunk)
-            if not data:
-                raise ValueError(f"offset {offset}: archive truncated")
-            buf += data
-            bytes_read += len(data)
+        got = _parse_one(buf)
+        if got is not None and got[0] == "ok":
+            _, headers, block, start, _ = got
+            if start != 0:
+                raise ValueError(f"offset {offset}: not a record start")
+            return headers, block, bytes_read
+        if got is not None:
+            raise ValueError(f"offset {offset}: unparseable record header")
+        if gz is not None and gz.eof:
+            raise ValueError(f"offset {offset}: member ended mid-record")
+        data = f.read(chunk)
+        if not data:
+            raise ValueError(f"offset {offset}: archive truncated")
 
 
 def read_warc_record_at(path: str, offset: int) -> tuple[dict[str, str], bytes, int]:
@@ -438,10 +493,7 @@ def read_warc_record_at(path: str, offset: int) -> tuple[dict[str, str], bytes, 
 
 
 # fetched-record schema: the pages shape plus the read-cost evidence column
-FETCHED_FROM_CDX_SCHEMA = (
-    "url string, warc_ts timestamp, html binary, lang string, "
-    "warc_file string, warc_offset long, fetch_bytes long"
-)
+FETCHED_FROM_CDX_SCHEMA = PAGES_FROM_WARC_SCHEMA + ", fetch_bytes long"
 
 
 def fetch_warc_bodies(cdx_df):
@@ -456,11 +508,9 @@ def fetch_warc_bodies(cdx_df):
     verify the index points where it claims."""
 
     def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["url", "warc_ts", "html", "lang", "warc_file", "warc_offset",
-                "fetch_bytes"]
         handles: dict[str, object] = {}
-        try:
-            rows: list[tuple] = []
+
+        def rows() -> Iterator[tuple]:
             for pdf in batches:
                 for path, off in zip(pdf["warc_file"], pdf["warc_offset"]):
                     local = path[5:] if path.startswith("file:") else path
@@ -468,21 +518,11 @@ def fetch_warc_bodies(cdx_df):
                     if f is None:
                         f = handles[local] = open(local, "rb")
                     headers, block, nread = _read_record_from(f, int(off))
-                    body = _http_body(block)
-                    rows.append((
-                        headers.get("warc-target-uri", ""),
-                        _parse_warc_date(headers.get("warc-date")),
-                        body,
-                        _sniff_lang(body, block[: len(block) - len(body)]),
-                        path,
-                        int(off),
-                        nread,
-                    ))
-                    if len(rows) >= _CHUNK_ROWS:
-                        yield pd.DataFrame(rows, columns=cols)
-                        rows = []
-            if rows:
-                yield pd.DataFrame(rows, columns=cols)
+                    fields = _record_fields(_RESPONSE, headers, block)
+                    yield (*fields, path, int(off), nread)
+
+        try:
+            yield from _frames(rows(), FETCHED_FROM_CDX_SCHEMA)
         finally:
             for f in handles.values():
                 f.close()
@@ -495,303 +535,140 @@ def fetch_warc_bodies(cdx_df):
 
 
 # ---------------------------------------------------------------------------
-# Spark source
+# Spark source and sink
 # ---------------------------------------------------------------------------
 
-PAGES_FROM_WARC_SCHEMA = (
-    "url string, warc_ts timestamp, html binary, lang string, "
-    "warc_file string, warc_offset long"
-)
+
+def _scan(spark, kind: _Kind, path_glob: str | list[str]):
+    """One ``binaryFile`` task per archive (WARC doesn't split), then an
+    Arrow-batched parse into ``kind.schema`` rows in bounded chunks; zero
+    shuffle."""
+
+    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        rows = (
+            row
+            for pdf in batches
+            for name, raw in zip(pdf["path"], pdf["content"])
+            for row in _records_to_rows(kind, name, bytes(raw))
+        )
+        return _frames(rows, kind.schema)
+
+    src = spark.read.format("binaryFile").load(path_glob)
+    return src.select("path", "content").mapInPandas(parse, kind.schema)
 
 
 def pages_from_warc(spark, path_glob: str | list[str]):
     """Scan WARC archives into the pages-table shape.
 
     ``path_glob`` is a directory, glob, or explicit file list (the lineage
-    runner passes per-group archive lists). One ``binaryFile`` task per
-    archive (WARC doesn't split), Arrow-batched parse, zero shuffle;
-    ``warc_file``/``warc_offset`` carry the CDX-style provenance the
-    lineage sink records per partition.
+    runner passes per-group archive lists). ``warc_file``/``warc_offset``
+    carry the CDX-style provenance the lineage sink records per partition.
     """
-
-    src = spark.read.format("binaryFile").load(path_glob)
-    return src.select("path", "content").mapInPandas(
-        _parse_archive_batches, PAGES_FROM_WARC_SCHEMA
-    )
+    return _scan(spark, _RESPONSE, path_glob)
 
 
-def _parse_archive_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """(path, content) batches → pages-shaped frames in bounded chunks."""
-    cols = ["url", "warc_ts", "html", "lang", "warc_file", "warc_offset"]
-    for pdf in batches:
-        rows: list[tuple] = []
-        for name, raw in zip(pdf["path"], pdf["content"]):
-            for row in warc_records_to_rows(name, bytes(raw)):
-                rows.append(row)
-                if len(rows) >= _CHUNK_ROWS:
-                    yield pd.DataFrame(rows, columns=cols)
-                    rows = []
-        if rows:
-            yield pd.DataFrame(rows, columns=cols)
+def text_from_wet(spark, path_glob: str | list[str]):
+    """Scan WET archives back into the extraction-output shape, with the
+    same scale contract and provenance columns as :func:`pages_from_warc`."""
+    return _scan(spark, _CONVERSION, path_glob)
 
 
-def write_warc_archives(
-    pages_df, out_dir: str, layouts: tuple[str, ...] = ("record", "file", "none")
-) -> int:
-    """Write a pages DataFrame ``(url, warc_ts, html, ...)`` as WARC
-    archives, one per partition (the producer job CC itself runs: crawler
-    shards → archives). Distributed — each task writes its own archive;
-    ``layouts`` cycle deterministically by partition id so consumers
-    exercise every listed layout (pass ``("record", "none")`` for a
-    seekable-only corpus — the whole-file-gzip layout cannot serve CDX
-    point fetches). Returns the number of archives written."""
-    import os
-
+def _write_archives(kind: _Kind, df, out_dir: str, layouts: tuple[str, ...]) -> int:
+    """Write ``df`` ``(url, warc_ts, payload)`` as ``kind`` archives, one
+    per partition (the producer job CC itself runs: crawler shards →
+    archives). Distributed — each task writes its own archive; ``layouts``
+    cycle deterministically by partition id so consumers exercise every
+    listed layout. Returns the number of archives written."""
     from pyspark import TaskContext
 
+    payload = kind.payload.split()[0]  # html / extracted_text
     os.makedirs(out_dir, exist_ok=True)
 
     def write_part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         pid = TaskContext.get().partitionId()
-        recs: list[tuple[str, _dt.datetime, bytes]] = []
-        for pdf in batches:
-            for url, ts, html in zip(pdf["url"], pdf["warc_ts"], pdf["html"]):
-                t = ts.to_pydatetime() if hasattr(ts, "to_pydatetime") else ts
-                if t.tzinfo is None:
-                    t = t.replace(tzinfo=_dt.timezone.utc)
-                recs.append((url, t, bytes(html)))
+        recs = [rec for pdf in batches for rec in zip(pdf["url"], pdf["warc_ts"], pdf[payload])]
         if recs:
             comp = layouts[pid % len(layouts)]
             # extension tells the truth: gzip/zcat, CDX indexers, and
             # pathGlobFilter patterns all key on it
-            ext = ".warc" if comp == "none" else ".warc.gz"
-            write_warc(os.path.join(out_dir, f"crawl-{pid:05d}{ext}"), recs, comp)
+            ext = kind.ext if comp == "none" else kind.ext + ".gz"
+            _write_archive(kind, os.path.join(out_dir, f"crawl-{pid:05d}{ext}"), recs, comp)
         yield pd.DataFrame({"archives": [1 if recs else 0]})
 
-    n = (
-        pages_df.select("url", "warc_ts", "html")
-        .mapInPandas(write_part, "archives int")
-        .groupBy()
-        .sum("archives")
-        .collect()[0][0]
-    )
-    return int(n or 0)
+    written = df.select("url", "warc_ts", payload).mapInPandas(write_part, "archives int")
+    return sum(r.archives for r in written.collect())
 
 
-def cached_warc_dir(
-    spark,
-    sf_dir: str,
-    files: int = 8,
-    layouts: tuple[str, ...] = ("record", "file", "none"),
-) -> str:
-    """Materialize the synthetic pages rows as WARC archives under /tmp,
-    cached by (sf_dir, files, layouts, generator+this module's hash) — the
-    local stand-in for 'the crawl archives already sit in object storage'."""
-    import hashlib
-    import os
-    import tempfile
+def write_warc_archives(
+    pages_df, out_dir: str, layouts: tuple[str, ...] = _LAYOUTS
+) -> int:
+    """Write a pages DataFrame ``(url, warc_ts, html, ...)`` as WARC
+    archives, one per partition (pass ``("record", "none")`` for a
+    seekable-only corpus — the whole-file-gzip layout cannot serve CDX
+    point fetches). Returns the number of archives written."""
+    return _write_archives(_RESPONSE, pages_df, out_dir, layouts)
 
+
+def write_wet_archives(
+    text_df, out_dir: str, layouts: tuple[str, ...] = _LAYOUTS
+) -> int:
+    """Write an extraction-output DataFrame ``(url, warc_ts,
+    extracted_text)`` as WET archives, one per partition — the distributed
+    sink a 10^12-doc extraction run ends in. Returns archives written."""
+    return _write_archives(_CONVERSION, text_df, out_dir, layouts)
+
+
+def _cached_archive_dir(spark, sf_dir: str, kind: _Kind, files: int, layouts, rows_of) -> str:
+    """Materialize ``rows_of(pages)`` — ``(url, warc_ts, payload)`` rows
+    over the synthetic pages — as cached ``kind`` archives under /tmp (the
+    local stand-in for 'the crawl archives already sit in object storage'),
+    keyed by (pages cache key, files, layouts, this module's hash)."""
     from docling_ibm_models_spark.sources.pages_source import cached_pages_path
 
     pages_path = cached_pages_path(spark, sf_dir)
     with open(os.path.abspath(__file__), "rb") as f:
         mod_hash = hashlib.sha256(f.read()).hexdigest()[:12]
     # fold the pages cache key in: a pages-generator change must invalidate
-    # the derived archives too
+    # the derived archives too. It starts with '_' (path-mangled), and a
+    # leading underscore makes Spark's file index treat the dir as a
+    # metadata path ("All paths were ignored"), so the kind goes first.
     pages_key = os.path.basename(os.path.dirname(pages_path))
     lay = "".join(s[0] for s in layouts)  # rfn / rn ...
-    key = f"{pages_key}-f{files}-{lay}-{mod_hash}"
-    out_dir = os.path.join(tempfile.gettempdir(), "bench_warc_cache", key)
+    key = f"{kind.warc_type}-{pages_key}-f{files}-{lay}-{mod_hash}"
+    out_dir = os.path.join(tempfile.gettempdir(), "bench_archive_cache", key)
     done = os.path.join(out_dir, "_SUCCESS")
     if not os.path.exists(done):
-        pages = spark.read.parquet(pages_path).repartition(files, "url")
-        write_warc_archives(pages, out_dir, layouts=layouts)
+        rows = rows_of(spark.read.parquet(pages_path)).repartition(files, "url")
+        _write_archives(kind, rows, out_dir, layouts)
         with open(done, "w") as f:
             f.write("ok")
     return out_dir
 
 
-# ---------------------------------------------------------------------------
-# WET (extracted-text "conversion" records) — the OUTPUT side of the on-ramp
-# ---------------------------------------------------------------------------
-#
-# Common Crawl publishes its extracted plain text as WET files: WARC
-# containers whose records are ``WARC-Type: conversion`` with a
-# ``text/plain`` block holding the extracted text (no HTTP envelope).
-# The engine's extraction output is exactly that shape, so the natural
-# interchange sink for a 10^12-doc run is a WET corpus the rest of the
-# ecosystem (CC tooling, dedup pipelines, tokenizer runs) can consume
-# directly. Public spec only (ISO 28500 + CC's published WET layout).
-
-
-def write_wet(
-    path: str,
-    records: list[tuple[str, _dt.datetime, str]],
-    compression: str = "record",
-) -> int:
-    """Write ``records`` = [(url, warc_ts, extracted_text), ...] as a WET
-    file (WARC conversion records, text/plain blocks, UTF-8). Layouts and
-    determinism guarantees match :func:`write_warc`; returns the record
-    count including the leading warcinfo."""
-    info_ts = (
-        records[0][1]
-        if records
-        else _dt.datetime(2024, 1, 1, tzinfo=_dt.timezone.utc)
-    )
-    info_block = (
-        b"software: docling-ibm-models-spark wet writer\r\n"
-        b"format: WARC File Format 1.0\r\n"
-        b"publisher: extraction pipeline (conversion records)\r\n"
-    )
-    raw_records = [
-        _warc_record(
-            [
-                ("WARC-Type", "warcinfo"),
-                ("WARC-Date", _iso(info_ts)),
-                ("Content-Type", "application/warc-fields"),
-            ],
-            info_block,
-        )
-    ]
-    for url, ts, text in records:
-        raw_records.append(
-            _warc_record(
-                [
-                    ("WARC-Type", "conversion"),
-                    ("WARC-Target-URI", url),
-                    ("WARC-Date", _iso(ts)),
-                    ("Content-Type", "text/plain"),
-                ],
-                text.encode("utf-8"),
-            )
-        )
-    _write_raw_records(path, raw_records, compression)
-    return len(raw_records)
-
-
-def wet_records_to_rows(
-    name: str, raw: bytes
-) -> Iterator[tuple[str, _dt.datetime | None, str, str, int]]:
-    """All conversion records of one WET archive as extraction-output-shaped
-    tuples ``(url, warc_ts, extracted_text, warc_file, warc_offset)``. Runs
-    on the same incremental parser as the response reader — bounded memory,
-    hostile Content-Length tolerated, offsets CDX-compatible."""
-    for headers, block, offset in iter_warc_records(raw):
-        if headers.get("warc-type") != "conversion":
-            continue
-        url = headers.get("warc-target-uri", "")
-        ts = _parse_warc_date(headers.get("warc-date"))
-        yield url, ts, block.decode("utf-8", errors="replace"), name, offset
-
-
-TEXT_FROM_WET_SCHEMA = (
-    "url string, warc_ts timestamp, extracted_text string, "
-    "warc_file string, warc_offset long"
-)
-
-
-def text_from_wet(spark, path_glob: str | list[str]):
-    """Scan WET archives back into the extraction-output shape. Same scale
-    contract as :func:`pages_from_warc`: one ``binaryFile`` task per
-    archive, Arrow-batched incremental parse, zero shuffle, CDX-style
-    provenance columns."""
-    src = spark.read.format("binaryFile").load(path_glob)
-    return src.select("path", "content").mapInPandas(
-        _parse_wet_batches, TEXT_FROM_WET_SCHEMA
-    )
-
-
-def _parse_wet_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cols = ["url", "warc_ts", "extracted_text", "warc_file", "warc_offset"]
-    for pdf in batches:
-        rows: list[tuple] = []
-        for name, raw in zip(pdf["path"], pdf["content"]):
-            for row in wet_records_to_rows(name, bytes(raw)):
-                rows.append(row)
-                if len(rows) >= _CHUNK_ROWS:
-                    yield pd.DataFrame(rows, columns=cols)
-                    rows = []
-        if rows:
-            yield pd.DataFrame(rows, columns=cols)
-
-
-def write_wet_archives(
-    text_df, out_dir: str, layouts: tuple[str, ...] = ("record", "file", "none")
-) -> int:
-    """Write an extraction-output DataFrame ``(url, warc_ts,
-    extracted_text)`` as WET archives, one per partition — the distributed
-    sink a 10^12-doc extraction run ends in. Layouts cycle by partition id
-    exactly like :func:`write_warc_archives`; returns archives written."""
-    import os
-
-    from pyspark import TaskContext
-
-    os.makedirs(out_dir, exist_ok=True)
-
-    def write_part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pid = TaskContext.get().partitionId()
-        recs: list[tuple[str, _dt.datetime, str]] = []
-        for pdf in batches:
-            for url, ts, text in zip(
-                pdf["url"], pdf["warc_ts"], pdf["extracted_text"]
-            ):
-                t = ts.to_pydatetime() if hasattr(ts, "to_pydatetime") else ts
-                if t.tzinfo is None:
-                    t = t.replace(tzinfo=_dt.timezone.utc)
-                recs.append((url, t, str(text)))
-        if recs:
-            comp = layouts[pid % len(layouts)]
-            ext = ".warc.wet" if comp == "none" else ".warc.wet.gz"
-            write_wet(os.path.join(out_dir, f"crawl-{pid:05d}{ext}"), recs, comp)
-        yield pd.DataFrame({"archives": [1 if recs else 0]})
-
-    n = (
-        text_df.select("url", "warc_ts", "extracted_text")
-        .mapInPandas(write_part, "archives int")
-        .groupBy()
-        .sum("archives")
-        .collect()[0][0]
-    )
-    return int(n or 0)
+def cached_warc_dir(
+    spark,
+    sf_dir: str,
+    files: int = 8,
+    layouts: tuple[str, ...] = _LAYOUTS,
+) -> str:
+    """The synthetic pages rows as ``files`` cached WARC archives."""
+    return _cached_archive_dir(spark, sf_dir, _RESPONSE, files, layouts, lambda pages: pages)
 
 
 def cached_wet_dir(spark, sf_dir: str, files: int = 8) -> str:
-    """Materialize the WET corpus the extraction pipeline produces over the
-    synthetic pages: pages → extraction (the real kernel) → per-record
-    warc_ts re-attached from the pages table → WET archives under /tmp,
-    cached by (pages cache key, files, this module's hash)."""
-    import hashlib
-    import os
-    import tempfile
-
+    """The WET corpus the extraction pipeline produces over the synthetic
+    pages: pages → extraction (the real kernel) → per-record warc_ts
+    re-attached from the pages table → ``files`` cached WET archives."""
     from docling_ibm_models_spark.pipeline.extract import (
         doc_text_clean,
         extract_doc_text,
     )
-    from docling_ibm_models_spark.sources.pages_source import cached_pages_path
 
-    pages_path = cached_pages_path(spark, sf_dir)
-    with open(os.path.abspath(__file__), "rb") as f:
-        mod_hash = hashlib.sha256(f.read()).hexdigest()[:12]
-    pages_key = os.path.basename(os.path.dirname(pages_path))
-    # prefix, not suffix: pages_key starts with '_' (path-mangled), and a
-    # leading underscore makes Spark's file index treat the dir as a
-    # metadata path ("All paths were ignored" driver-log warning)
-    key = f"wet-{pages_key}-f{files}-{mod_hash}"
-    out_dir = os.path.join(tempfile.gettempdir(), "bench_wet_cache", key)
-    done = os.path.join(out_dir, "_SUCCESS")
-    if not os.path.exists(done):
-        pages = spark.read.parquet(pages_path)
-        extracted = doc_text_clean(extract_doc_text(pages)).select(
-            "url", "extracted_text"
-        )
+    def extracted(pages):
         # re-attach warc_ts for the conversion records' WARC-Date — one
         # url-keyed shuffle join in the fixture producer only; the
         # production sink receives warc_ts alongside the extraction output
-        with_ts = extracted.join(
-            spark.read.parquet(pages_path).select("url", "warc_ts"), "url"
-        ).repartition(files, "url")
-        write_wet_archives(with_ts, out_dir)
-        with open(done, "w") as f:
-            f.write("ok")
-    return out_dir
+        text = doc_text_clean(extract_doc_text(pages)).select("url", "extracted_text")
+        return text.join(pages.select("url", "warc_ts"), "url")
+
+    return _cached_archive_dir(spark, sf_dir, _CONVERSION, files, _LAYOUTS, extracted)

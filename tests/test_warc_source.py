@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import datetime as dt
 import os
+import zlib
 
 import pytest
 
@@ -19,10 +20,12 @@ from docling_ibm_models_spark.sources.warc_source import (
     iter_warc_records,
     pages_from_warc,
     warc_records_to_rows,
+    wet_records_to_rows,
     write_warc,
+    write_wet,
 )
 
-from .conftest import SF_SMALL
+from .conftest import SF_MED, SF_SMALL
 
 TS0 = dt.datetime(2024, 3, 5, 12, 0, 7, tzinfo=dt.timezone.utc)
 
@@ -38,18 +41,36 @@ def _recs(n: int, salt: str = "") -> list[tuple[str, dt.datetime, bytes]]:
     ]
 
 
-@pytest.mark.parametrize("compression", ["record", "file", "none"])
-def test_round_trip(tmp_path, compression):
-    recs = _recs(7)
+def _kind(kind: str):
+    """(writer, row reader, row width) of a record kind."""
+    if kind == "warc":
+        return write_warc, warc_records_to_rows, 6
+    return write_wet, wet_records_to_rows, 5
+
+
+_LAYOUTS = ["record", "file", "none"]
+
+
+# the WARC cases keep their bare layout ids
+@pytest.mark.parametrize(
+    "kind, compression",
+    [pytest.param("warc", c, id=c) for c in _LAYOUTS]
+    + [pytest.param("wet", c, id=f"wet-{c}") for c in _LAYOUTS],
+)
+def test_round_trip(tmp_path, kind, compression):
+    write, read, width = _kind(kind)
+    recs = _recs(7) if kind == "warc" else _wet_recs(7)
     p = str(tmp_path / f"a.{compression}.warc")
-    n_written = write_warc(p, recs, compression=compression)
+    n_written = write(p, recs, compression=compression)
     raw = open(p, "rb").read()
-    assert n_written == 8  # warcinfo + 7 responses
+    assert n_written == 8  # warcinfo + 7 responses / conversions
     assert len(list(iter_warc_records(raw))) == 8  # warcinfo parsed too
-    rows = list(warc_records_to_rows("a", raw))
+    rows = list(read("a", raw))
+    assert {len(r) for r in rows} == {width}
     assert [(r[0], r[1], r[2]) for r in rows] == recs
-    assert all(r[3] is None for r in rows)  # no <html lang> in these bodies
-    offsets = [r[5] for r in rows]
+    if kind == "warc":
+        assert all(r[3] is None for r in rows)  # no <html lang> in these bodies
+    offsets = [r[-1] for r in rows]
     assert offsets == sorted(offsets)
     if compression != "file":
         # CDX-style provenance: every response record has its own offset
@@ -336,13 +357,16 @@ def test_archive_extension_matches_compression(spark, tmp_path):
             gzip.GzipFile(f).read(16)
 
 
-def test_naive_datetime_written_as_utc(tmp_path):
-    """A NAIVE timestamp passed to write_warc is treated as UTC, never
-    shifted by the host zone (ADVICE r4: astimezone() on a naive datetime
+@pytest.mark.parametrize("kind", ["warc", "wet"])
+def test_naive_datetime_written_as_utc(tmp_path, kind):
+    """A NAIVE timestamp passed to write_warc / write_wet is treated as
+    UTC, never shifted by the host zone (astimezone() on a naive datetime
     interprets it as host-local time)."""
     import os
     import time as _time
 
+    write, read, _ = _kind(kind)
+    payload = b"<p>x</p>" if kind == "warc" else "t"
     naive = dt.datetime(2025, 3, 1, 12, 0, 0)  # no tzinfo
     aware = naive.replace(tzinfo=dt.timezone.utc)
     old_tz = os.environ.get("TZ")
@@ -351,11 +375,13 @@ def test_naive_datetime_written_as_utc(tmp_path):
     try:
         p1 = str(tmp_path / "naive.warc")
         p2 = str(tmp_path / "aware.warc")
-        write_warc(p1, [("https://ex.com/a", naive, b"<p>x</p>")], compression="none")
-        write_warc(p2, [("https://ex.com/a", aware, b"<p>x</p>")], compression="none")
+        write(p1, [("https://ex.com/a", naive, payload)], compression="none")
+        write(p2, [("https://ex.com/a", aware, payload)], compression="none")
         b1, b2 = open(p1, "rb").read(), open(p2, "rb").read()
         assert b"2025-03-01T12:00:00Z" in b1
         assert b1 == b2
+        ((_, ts, *_),) = read("n", b1)
+        assert ts == naive.replace(tzinfo=dt.timezone.utc)
     finally:
         if old_tz is None:
             os.environ.pop("TZ", None)
@@ -435,6 +461,86 @@ def test_cdx_fetch_rejects_non_record_offsets(tmp_path):
         read_warc_record_at(p, len(raw) + 10)  # past EOF
 
 
+def _seekable_archive(tmp_path, compression, recs):
+    """(path, raw bytes, response offsets) of a seekable archive."""
+    p = str(tmp_path / ("cc.warc" if compression == "none" else "cc.warc.gz"))
+    write_warc(p, recs, compression=compression)
+    raw = open(p, "rb").read()
+    offs = [off for h, _, off in iter_warc_records(raw) if h.get("warc-type") == "response"]
+    return p, raw, offs
+
+
+@pytest.mark.parametrize("compression", ["record", "none"])
+def test_cdx_fetch_rejects_truncated_archive(tmp_path, compression):
+    from docling_ibm_models_spark.sources.warc_source import read_warc_record_at
+
+    p, raw, offs = _seekable_archive(tmp_path, compression, _big_recs(3))
+    # cut the file halfway through the last record
+    with open(p, "wb") as f:
+        f.write(raw[: offs[-1] + (len(raw) - offs[-1]) // 2])
+    with pytest.raises(ValueError, match="archive truncated"):
+        read_warc_record_at(p, offs[-1])
+    # the records before the cut still fetch
+    assert read_warc_record_at(p, offs[0])[0]["warc-type"] == "response"
+
+
+@pytest.mark.parametrize("compression", ["record", "none"])
+def test_cdx_fetch_rejects_unparseable_content_length(tmp_path, compression):
+    import gzip
+
+    from docling_ibm_models_spark.sources.warc_source import read_warc_record_at
+
+    rec = (
+        b"WARC/1.0\r\nWARC-Type: response\r\n"
+        b"WARC-Target-URI: https://bad.example/\r\n"
+        b"Content-Length: 12x\r\n\r\n<p>body</p>\r\n\r\n"
+    )
+    p = str(tmp_path / "bad.warc")
+    with open(p, "wb") as f:
+        f.write(gzip.compress(rec, mtime=0) if compression == "record" else rec)
+    with pytest.raises(ValueError, match="unparseable record header"):
+        read_warc_record_at(p, 0)
+
+
+def test_cdx_fetch_rejects_mid_record_offset_in_plain_archive(tmp_path):
+    import io
+
+    from docling_ibm_models_spark.sources.warc_source import (
+        _read_record_from,
+        read_warc_record_at,
+    )
+
+    class CountingReads(io.BytesIO):
+        def read(self, n=-1):
+            reads.append(n)
+            return super().read(n)
+
+    # records larger than one read: the next record start is not in it
+    p, raw, offs = _seekable_archive(tmp_path, "none", _big_recs(3, body_kb=64))
+    body_at = raw.index(b"<html>", offs[1])
+    for off in (offs[1] + 3, body_at):  # inside the header; inside the block
+        with pytest.raises(ValueError, match="not a record start"):
+            read_warc_record_at(p, off)
+        # refused on the first read, not after reading ahead for a record
+        reads: list[int] = []
+        with pytest.raises(ValueError, match="not a record start"):
+            _read_record_from(CountingReads(raw), off)
+        assert len(reads) == 1
+
+
+@pytest.mark.parametrize("compression", ["record", "none"])
+def test_cdx_fetch_refuses_records_over_the_cap(tmp_path, compression, monkeypatch):
+    from docling_ibm_models_spark.sources import warc_source
+
+    # ~66 KiB records: larger than one 32 KiB read, so both layouts have
+    # buffered past a 40 KiB cap before the record is complete
+    p, _, offs = _seekable_archive(tmp_path, compression, _big_recs(2, body_kb=64))
+    assert warc_source.read_warc_record_at(p, offs[0])[1]  # fetches uncapped
+    monkeypatch.setattr(warc_source, "_MAX_FETCH_RECORD", 40 * 1024)
+    with pytest.raises(ValueError, match="record exceeds fetch cap"):
+        warc_source.read_warc_record_at(p, offs[0])
+
+
 def test_fetch_warc_bodies_spark_stage(tmp_path, spark):
     """Distributed fetch: CDX rows (warc_file, warc_offset) → bodies via
     seek-read, url/ts re-derived from the FETCHED record; rows must equal
@@ -456,7 +562,7 @@ def test_fetch_warc_bodies_spark_stage(tmp_path, spark):
     for p in paths:
         raw = open(p, "rb").read()
         for url, ts, html, lang, _, off in warc_records_to_rows(p, raw):
-            if (hash(url) % 3) == 0:
+            if zlib.crc32(url.encode()) % 3 == 0:
                 continue  # sample: skip a third
             expected[url] = (ts, html)
             cdx_rows.append((p, off))
@@ -490,32 +596,10 @@ def _wet_recs(n: int) -> list[tuple[str, dt.datetime, str]]:
     ]
 
 
-@pytest.mark.parametrize("compression", ["record", "file", "none"])
-def test_wet_round_trip(tmp_path, compression):
-    from docling_ibm_models_spark.sources.warc_source import (
-        wet_records_to_rows,
-        write_wet,
-    )
-
-    recs = _wet_recs(7)
-    p = str(tmp_path / f"a.{compression}.warc.wet")
-    n_written = write_wet(p, recs, compression=compression)
-    assert n_written == 8  # warcinfo + 7 conversions
-    with open(p, "rb") as f:
-        raw = f.read()
-    rows = list(wet_records_to_rows("a", raw))
-    assert [(u, ts, t) for u, ts, t, _, _ in rows] == recs
-
-
 def test_wet_reader_skips_response_records(tmp_path):
     # a mixed archive (CC never mixes, but a tolerant reader must filter by
     # WARC-Type, not by position): WET reader sees only conversions, the
     # pages reader only responses
-    from docling_ibm_models_spark.sources.warc_source import (
-        wet_records_to_rows,
-        write_wet,
-    )
-
     p_warc = str(tmp_path / "m.warc")
     p_wet = str(tmp_path / "m.warc.wet")
     write_warc(p_warc, _recs(3), compression="none")
@@ -548,16 +632,16 @@ def test_wet_spark_scan_and_distributed_writer(spark, tmp_path):
     )
 
 
-def test_wet_naive_datetime_written_as_utc(tmp_path):
+def test_cache_dir_names_are_visible_to_spark(spark):
+    """Spark's file index skips a path whose name starts with '_' or '.'
+    (the driver logs "All paths were ignored"); no cached archive dir may."""
+    import tempfile
+
     from docling_ibm_models_spark.sources.warc_source import (
-        wet_records_to_rows,
-        write_wet,
+        cached_warc_dir,
+        cached_wet_dir,
     )
 
-    naive = dt.datetime(2024, 3, 5, 12, 0, 7)  # no tzinfo
-    p = str(tmp_path / "naive.warc.wet")
-    write_wet(p, [("https://ex.com/", naive, "t")], compression="none")
-    with open(p, "rb") as f:
-        raw = f.read()
-    ((_, ts, _, _, _),) = wet_records_to_rows("n", raw)
-    assert ts == naive.replace(tzinfo=dt.timezone.utc)
+    for d in (cached_warc_dir(spark, SF_MED), cached_wet_dir(spark, SF_MED)):
+        parts = os.path.relpath(d, tempfile.gettempdir()).split(os.sep)
+        assert not [p for p in parts if p.startswith(("_", "."))], d
