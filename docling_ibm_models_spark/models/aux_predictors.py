@@ -94,45 +94,6 @@ def validate_predict_inputs(images, labels, temperature=0.0):
     return do_sample
 
 
-class DeterministicCodeFormulaPredictor:
-    """M7 stand-in: real input-validation contract + prompt build + stubbed
-    generate + real tail strip."""
-
-    def predict(
-        self, images: list[bytes], labels: list[str], temperature: float = 0.0
-    ) -> list[str]:
-        validate_predict_inputs(images, labels, temperature)
-        out = []
-        for img, label in zip(images, labels):
-            _prompt = build_prompt(label)  # raises on bad label, like reference
-            h = hashlib.md5(img or b"").hexdigest()
-            fake = (
-                f"x = {int(h[:4], 16) % 100}" if label == "code"
-                else f"\\frac{{{int(h[:2], 16)}}}{{{int(h[2:4], 16) + 1}}}" + r"\quad\\"
-            )
-            out.append(strip_latex_tail(fake))
-        return out
-
-
-class DeterministicFigureClassifier:
-    """M8 stand-in: stubbed softmax + real top-k + input-type contract
-    (reference document_figure_classifier_predictor.py:150-158 raises
-    TypeError on unsupported payloads, covered by its
-    tests/test_document_figure_classifier.py:64-71)."""
-
-    def predict(self, images: list[bytes]) -> list[list[tuple[str, float]]]:
-        for image in images:
-            if not isinstance(image, (bytes, bytearray, memoryview)):
-                raise TypeError("Not supported input image format")
-        batch = []
-        for img in images:
-            h = hashlib.md5(img or b"").digest()
-            raw = [h[i % 16] + 1 for i in range(len(FIGURE_CLASSES))]
-            total = float(sum(raw))
-            batch.append(topk_sort([v / total for v in raw]))
-        return batch
-
-
 class CodeFormulaVisionTower:
     """M7 with a REAL vision tower: deterministic pixel synthesis (no
     rasterizer in-container) → the real SamOptImageProcessor preprocessing

@@ -14,7 +14,7 @@ seeded synthetic weights and asserts near-bitwise (rtol 1e-10) equality of
 (classes, boxes) on randomized inputs.
 
 Weights are plain numpy arrays (dict tree) — at cluster scale they come off
-the released safetensors checkpoint and ride the same int8-quantized
+the released safetensors checkpoint and ride the same (unquantized)
 broadcast as the other model constants (models/harness.py); here they are
 deterministic seeded synthetics because the container has no weights and no
 network.
@@ -184,14 +184,6 @@ def encoder_input_prep(w: dict, enc_inputs_nhwc: np.ndarray) -> np.ndarray:
     b = x.shape[0]
     d = x.shape[-1]
     return np.transpose(x.reshape(b, -1, d), (1, 0, 2))
-
-
-def embed_with_positions(embedding: np.ndarray, pe: np.ndarray, tag_ids: np.ndarray) -> np.ndarray:
-    """tgt prep (transformer_rs.py:198): embedding lookup → (seq, batch,
-    dim) → + positional table (eval-mode dropout = identity)."""
-    emb = embedding[np.asarray(tag_ids, dtype=np.int64)]  # (batch, seq, dim)
-    tgt = np.transpose(emb, (1, 0, 2))
-    return tgt + pe[: tgt.shape[0], :]
 
 
 # ---------------------------------------------------------------------------

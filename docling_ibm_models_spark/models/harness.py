@@ -3,9 +3,9 @@
 At cluster scale the model stages need three things the reference never
 deals with (it is single-process):
 
-1. **weight distribution** — weights are broadcast once
-   (``spark.sparkContext.broadcast``; on a real cluster optionally
-   int8-quantized first) instead of being re-read per task;
+1. **weight distribution** — weights are broadcast once, as float
+   arrays and unquantized (``spark.sparkContext.broadcast``), instead of
+   being re-read per task;
 2. **per-worker singletons** — a process-global registry keyed by model
    name, so a long-lived python worker (``spark.python.worker.reuse=true``)
    deserializes the model once and serves every subsequent task
@@ -44,11 +44,6 @@ def get_or_create(name: str, factory: Callable[[], Any]) -> Any:
     return model
 
 
-def clear_registry() -> None:
-    with _LOCK:
-        _REGISTRY.clear()
-
-
 def get_profiler(name: str = "default", window_size: int = 20):
     """Per-worker AggSectionProfiler singleton (reference AggProfiler is a
     process-global singleton, app_profiler.py:148; here it rides the same
@@ -70,49 +65,6 @@ def get_profiler(name: str = "default", window_size: int = 20):
 def broadcast_weights(spark, weights: dict) -> Any:
     """Driver-side: ship a weights dict to every executor once."""
     return spark.sparkContext.broadcast(weights)
-
-
-def quantize_weights(weights: dict) -> dict:
-    """Symmetric per-tensor int8 quantization for the broadcast path: a
-    float ndarray entry becomes {"q": int8 array, "scale": max|w|/127}.
-    At cluster scale this cuts broadcast bytes ~4× (the north-star's
-    'broadcasts quantized model weights'); non-array entries pass through.
-    Lossy by design — use for weights, never for exact config values."""
-    import numpy as np
-
-    out: dict = {}
-    for k, v in weights.items():
-        if isinstance(v, np.ndarray) and np.issubdtype(v.dtype, np.floating):
-            amax = float(np.max(np.abs(v))) if v.size else 0.0
-            scale = amax / 127.0 if amax > 0 else 1.0
-            out[k] = {
-                "__quant__": "int8-symmetric",
-                "q": np.clip(np.rint(v / scale), -127, 127).astype(np.int8),
-                "scale": scale,
-            }
-        else:
-            out[k] = v
-    return out
-
-
-def dequantize_weights(weights: dict) -> dict:
-    """Executor-side inverse of :func:`quantize_weights` (float32 out)."""
-    import numpy as np
-
-    out: dict = {}
-    for k, v in weights.items():
-        if isinstance(v, dict) and v.get("__quant__") == "int8-symmetric":
-            out[k] = (v["q"].astype(np.float32) * np.float32(v["scale"]))
-        else:
-            out[k] = v
-    return out
-
-
-def broadcast_weights_quantized(spark, weights: dict) -> Any:
-    """broadcast(quantize(weights)) — executors call
-    :func:`dequantize_weights` on ``bc.value`` once inside their model
-    factory (the singleton makes it a per-worker one-time cost)."""
-    return spark.sparkContext.broadcast(quantize_weights(weights))
 
 
 _BC_CACHE: dict = {}

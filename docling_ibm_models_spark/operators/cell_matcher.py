@@ -144,45 +144,6 @@ def match_iopdf(table_cells, pdf_cells):
     return matches, count
 
 
-def match_iou(table_cells, pdf_cells, iou_thres):
-    """J3 — IoU variant (tf_cell_matcher.py:529-605): pairs with
-    IoU ≥ threshold, match record carries the pdf text."""
-    if not pdf_cells:
-        return {}, 0
-    t_areas = [
-        (t["bbox"][2] - t["bbox"][0]) * (t["bbox"][3] - t["bbox"][1])
-        for t in table_cells
-    ]
-    p_areas = [
-        (p["bbox"][2] - p["bbox"][0]) * (p["bbox"][3] - p["bbox"][1])
-        for p in pdf_cells
-    ]
-    matches: dict[int, list[dict]] = {}
-    count = 0
-    for i, tcell in enumerate(table_cells):
-        tb = tcell["bbox"]
-        for j, pcell in enumerate(pdf_cells):
-            ib = bbox_intersection(tb, pcell["bbox"])
-            if ib is None:
-                continue
-            inter = (ib[2] - ib[0]) * (ib[3] - ib[1])
-            iou = 0
-            denom = float(t_areas[i] + p_areas[j] - inter)
-            if denom > 0:
-                iou = inter / denom
-            if iou < iou_thres:
-                continue
-            matches.setdefault(pcell["id"], []).append(
-                {
-                    "table_cell_id": tcell["cell_id"],
-                    "iou": iou,
-                    "text": pcell["text"],
-                }
-            )
-            count += 1
-    return matches, count
-
-
 def normalize_pdf_cells(tokens):
     """Copy tokens, lowering dict bboxes {l,t,r,b} to [l,t,r,b] lists
     (tf_cell_matcher.py:129-140)."""
@@ -196,32 +157,6 @@ def normalize_pdf_cells(tokens):
             tok["bbox"] = list(bb)
         out.append(tok)
     return out
-
-
-def match_cells_dummy(iocr_page, table_bbox, prediction, iou_thres=0.05):
-    """No-matching variant (reference match_cells_dummy,
-    tf_cell_matcher.py:177-234): build cells + translate bboxes, matches
-    stay empty. NB the reference's dummy path lowers token bboxes without
-    the isinstance check — tokens must be dict-bbox form."""
-    pdf_cells = [
-        {**dict(tok), "bbox": [tok["bbox"]["l"], tok["bbox"]["t"], tok["bbox"]["r"], tok["bbox"]["b"]]}
-        for tok in iocr_page["tokens"]
-    ]
-    bboxes_page = translate_bboxes(table_bbox, prediction["bboxes"])
-    table_cells = build_table_cells(
-        prediction["html_seq"], prediction["rs_seq"], bboxes_page, prediction["classes"]
-    )
-    return {
-        "iou_threshold": iou_thres,
-        "table_bbox": table_bbox,
-        "prediction_bboxes_page": bboxes_page,
-        "prediction": prediction,
-        "pdf_cells": pdf_cells,
-        "page_height": iocr_page["height"],
-        "page_width": iocr_page["width"],
-        "table_cells": table_cells,
-        "matches": {},
-    }
 
 
 def match_cells(iocr_page, table_bbox, prediction, iou_thres=0.05):

@@ -1,86 +1,17 @@
-"""P3 — pixel-level page resize matching cv2.INTER_AREA semantics, in pure
-numpy (the container has no cv2).
+"""Pixel-level image preprocessing in pure numpy (the container has no
+cv2, torch or PIL): cv2 INTER_LINEAR resize, the TableFormer
+normalize → resize → transpose chain (reference tf_predictor._prepare_image,
+tf_predictor.py:990-1015) and the PIL-bilinear preprocessing of the
+code-formula and figure-classifier predictors.
 
-The reference's ``resize_img`` (tf_predictor.py:427-455) downsizes every
-page to height 1024 with ``cv2.INTER_AREA`` before table prediction
-(:469). OpenCV's INTER_AREA has two publicly-documented regimes
-(modules/imgproc/src/resize.cpp):
-
-* **decimation** (both scale factors ≥ 1, i.e. shrinking): each output
-  pixel is the exact area-weighted mean of the source pixels it covers —
-  a plain box filter when the factor is an integer, fractional edge
-  weights otherwise;
-* **zoom** (either factor < 1): a modified bilinear where the sampling
-  position is derived as ``sx = floor(dx*scale)``,
-  ``fx = (dx+1) - (sx+1)*dst/src`` clamped at 0 and taken mod 1 (integer
-  zoom factors degenerate to nearest-neighbor, matching the cv2 docs).
-
-Float inputs reproduce cv2 exactly (same arithmetic); uint8 inputs use
-round-half-to-even (cvRound) on the float accumulation — cv2's fixed-point
-fast paths can differ by at most 1 LSB on adversarial fractions, which is
-documented here because cv2 cannot run in-container to record goldens.
+The reference's page-level ``resize_img`` (cv2 INTER_AREA to height 1024,
+tf_predictor.py:427-455) is not ported: the table stage receives its crop
+already at table scale, so no query or stage downsizes a page.
 """
 
 from __future__ import annotations
 
 import numpy as np
-
-
-def _area_weights(dst: int, src: int):
-    """Per-output-pixel (start_index, weight_vector) for 1-D area
-    decimation with scale = src/dst ≥ 1."""
-    scale = src / dst
-    out = []
-    for d in range(dst):
-        a, b = d * scale, (d + 1) * scale
-        i0, i1 = int(np.floor(a)), int(np.ceil(b))
-        i1 = min(i1, src)
-        w = np.ones(i1 - i0, dtype=np.float64)
-        w[0] -= a - i0
-        if i1 - 1 >= i0:
-            w[-1] -= i1 - b
-        out.append((i0, w / w.sum()))
-    return out
-
-
-def _resize_area_shrink(img: np.ndarray, dw: int, dh: int) -> np.ndarray:
-    h, w = img.shape[:2]
-    acc = img.astype(np.float64)
-    ys = _area_weights(dh, h)
-    xs = _area_weights(dw, w)
-    rows = np.stack([np.tensordot(ws, acc[i0 : i0 + len(ws)], axes=(0, 0)) for i0, ws in ys])
-    cols = np.stack(
-        [np.tensordot(ws, rows[:, i0 : i0 + len(ws)], axes=(0, 1)) for i0, ws in xs],
-        axis=1,
-    )
-    return cols
-
-
-def _zoom_coords(dst: int, src: int):
-    """INTER_AREA zoom path coordinate mapping (resize.cpp): returns
-    (sx, fx) arrays for bilinear with the modified fraction."""
-    scale = src / dst  # cv2 scale_x; inv_scale_x = dst/src
-    dx = np.arange(dst, dtype=np.float64)
-    sx = np.floor(dx * scale).astype(np.int64)
-    # resize.cpp INTER_AREA zoom: fx = (dx+1) - (sx+1)*inv_scale_x, clamped
-    # at 0 then mod 1 — integer zoom factors degenerate to nearest-neighbor
-    fx = (dx + 1) - (sx + 1) * (dst / src)
-    fx = np.where(fx <= 0, 0.0, fx - np.floor(fx))
-    sx = np.clip(sx, 0, src - 1)
-    sx1 = np.clip(sx + 1, 0, src - 1)
-    return sx, sx1, fx
-
-
-def _resize_area_zoom(img: np.ndarray, dw: int, dh: int) -> np.ndarray:
-    h, w = img.shape[:2]
-    acc = img.astype(np.float64)
-    sy, sy1, fy = _zoom_coords(dh, h)
-    sx, sx1, fx = _zoom_coords(dw, w)
-    # separable, rows then columns (see resize_bilinear)
-    fy_col = fy.reshape(-1, *([1] * (acc.ndim - 1)))
-    rows = acc[sy] * (1 - fy_col) + acc[sy1] * fy_col
-    fx_row = fx.reshape(1, -1, *([1] * (acc.ndim - 2)))
-    return rows[:, sx] * (1 - fx_row) + rows[:, sx1] * fx_row
 
 
 def _linear_coords(dst: int, src: int):
@@ -155,32 +86,6 @@ def prepare_image(
     out = out.transpose(2, 1, 0)  # (channels, width, height) — quirk kept
     out = (out / 255.0).astype(np.float32)
     return out[np.newaxis, ...]
-
-
-def resize_img(image: np.ndarray, width: int | None = None, height: int | None = None):
-    """Reference resize_img (tf_predictor.py:427-455): one target dimension,
-    the other scaled proportionally (int-truncated), INTER_AREA resample.
-    Returns (resized, scale_factor)."""
-    h, w = image.shape[:2]
-    if width is None and height is None:
-        return image, 1.0
-    if width is None:
-        sf = height / float(h)
-        dim = (int(w * sf), height)
-    else:
-        sf = width / float(w)
-        dim = (width, int(h * sf))
-    dw, dh = dim
-    if dw >= 1 and dh >= 1 and w / dw >= 1 and h / dh >= 1:
-        out = _resize_area_shrink(image, dw, dh)
-    else:
-        out = _resize_area_zoom(image, dw, dh)
-    if np.issubdtype(image.dtype, np.integer):
-        info = np.iinfo(image.dtype)
-        out = np.clip(np.rint(out), info.min, info.max).astype(image.dtype)
-    else:
-        out = out.astype(image.dtype)
-    return out, sf
 
 
 # ---------------------------------------------------------------------------

@@ -3,10 +3,9 @@
 Treats image/audio/video payloads as opaque ``binary`` columns with typed
 metadata. The *real*, tested parts are format sniffing (magic bytes),
 metadata extraction, batch shaping and the Spark plumbing
-(``mapInPandas`` with explicit schemas, partition-friendly); the decode /
-feature-extract kernels are STUBBED behind clearly-marked deterministic
-fakes (``NotImplementedError`` for real decoding — the container ships no
-image/audio libraries), exactly as the build brief prescribes.
+(``mapInPandas`` with explicit schemas, partition-friendly); the
+feature-extract kernel is STUBBED behind a clearly-marked deterministic
+fake (the container ships no image/audio libraries).
 """
 
 from __future__ import annotations
@@ -19,9 +18,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     FloatType,
-    IntegerType,
     LongType,
     StringType,
     StructField,
@@ -51,14 +48,6 @@ def sniff_mime(payload: bytes | None) -> str:
         if head.startswith(magic):
             return mime
     return "application/octet-stream"
-
-
-def decode_image(payload: bytes):  # pragma: no cover - stub by design
-    """STUB: real decoding needs PIL/cv2 (absent in this container)."""
-    raise NotImplementedError(
-        "image decode requires PIL/cv2; swap in a real backend on a cluster "
-        "image that ships them. Use fake_features() for the plumbing path."
-    )
 
 
 def fake_features(payload: bytes | None, dim: int = 16) -> list[float]:
@@ -114,32 +103,3 @@ def media_metadata_stage(
             yield pd.DataFrame(cols)
 
     return df.select("url", payload_col).mapInPandas(gen, schema=out_schema)
-
-
-FRAME_SAMPLE = StructType(
-    [
-        StructField("url", StringType(), False),
-        StructField("frame_idx", IntegerType(), False),
-        StructField("frame", BinaryType(), False),
-    ]
-)
-
-
-def frame_sample_stage(df: DataFrame, payload_col: str = "html", every: int = 4096) -> DataFrame:
-    """Video-frame-sampling shape: one payload row → N pseudo-frame rows
-    (deterministic byte slices standing in for decoded frames; a real
-    decoder would plug into the same generator)."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for url, p in zip(pdf["url"], pdf[payload_col]):
-                payload = bytes(p) if p is not None else b""
-                for i, off in enumerate(range(0, max(len(payload), 1), every)):
-                    rows.append(
-                        {"url": url, "frame_idx": i, "frame": payload[off : off + 64]}
-                    )
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return df.select("url", payload_col).mapInPandas(gen, schema=FRAME_SAMPLE)

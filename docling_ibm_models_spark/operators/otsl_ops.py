@@ -9,8 +9,10 @@ span; ``nl`` terminates a grid row.
 Behavioral parity surface (verified in tests/test_otsl_parity.py by importing
 the reference and comparing on random tables — no code copied):
 /root/reference/docling_ibm_models/tableformer/otsl.py:30-245
-(``otsl_clean``, ``otsl_sqr_chk``, ``otsl_pad_to_sqr``, ``otsl_to_html``,
-``otsl_tags_cells_sync_chk``) and :248-554 (``html_to_otsl``).
+(``otsl_clean``, ``otsl_sqr_chk``, ``otsl_pad_to_sqr``, ``otsl_to_html``)
+and the span map of :248-554 (``html_to_otsl``). The reference parser's
+quirk-exact tag stream is not ported; the grid-based :func:`html_to_otsl`
+here builds the OTSL tags of the tests' seeded tables.
 
 Unlike the reference's token-stream state machine, this implementation
 materializes a 2-D occupancy grid and derives everything from it. These are
@@ -68,15 +70,6 @@ def pad_to_square(tags: list[str], pad_tag: str) -> list[str]:
         out.extend([pad_tag] * (w - len(r)))
         out.append("nl")
     return out
-
-
-def count_cell_tags(tags: list[str]) -> int:
-    return sum(1 for t in tags if t in _CELL_TAG_SET)
-
-
-def tags_cells_in_sync(tags: list[str], n_cells: int) -> bool:
-    """Cell-emitting tag count must equal the bbox/cell count (otsl.py:84-96)."""
-    return count_cell_tags(tags) == n_cells
 
 
 def _span_extent_right(rows: list[list[str]], x: int, y: int) -> int:
@@ -349,145 +342,3 @@ def html_to_otsl(structure_tokens: list[str], cell_is_empty: list[bool] | None =
     return OtslTable(tags=tags, spans=spans, rows=n_rows, cols=width)
 
 
-# exact token → span lookup, byte-for-byte the reference's fixed dicts
-# (otsl.py:267-309): ONLY ' colspan="k"' / ' rowspan="k"' with k in 2..20,
-# single leading space, no padding ('02'), no trailing whitespace — any
-# variant is silently ignored, exactly like a dict miss in the reference
-_SPAN_TOKENS = {
-    kind: {f' {kind}="{k}"': k for k in range(2, 21)}
-    for kind in ("colspan", "rowspan")
-}
-
-
-def _attr_span(tok: str, kind: str) -> int | None:
-    return _SPAN_TOKENS[kind].get(tok)
-
-
-def html_to_otsl_ref(
-    structure_tokens: list[str], cell_is_empty: list[bool] | None = None
-) -> OtslTable | None:
-    """HTML structure tokens → OTSL, BYTE-IDENTICAL to the reference's
-    streaming parser (otsl.py:248-554) — including its quirks:
-
-    * **2-D-span cursor bug** (otsl.py:494-515): the ``xcel`` tags appended
-      for a colspan+rowspan cell do NOT advance ``current_column`` (the
-      colspan-only branch does, :480), so later cells in the same row read
-      the wrong up-expand column — the emitted stream is corrupted relative
-      to the true grid, and the :359 guard can reject the table
-      (→ ``None``, the reference's ``(False, {})``).
-    * trailing-ucel fill compares against the previous row's expand list
-      INCLUDING its ``[-1, -1]`` terminator (:383-409).
-    * non-square results are padded with ``fcel`` to the max row length
-      (:68-82 ``otsl_pad_to_sqr``) — note the decoder pads with ``lcel``
-      instead (tf_predictor path); both are preserved separately.
-
-    Use :func:`html_to_otsl` for the clean grid semantics; use this when
-    tag-stream parity with the reference matters (training-data prep,
-    golden comparisons). Returns ``None`` where the reference returns
-    ``ok=False``; raises IndexError exactly where the reference would.
-    """
-    t_cells: list[list[str]] = []
-    tl_cells: list[str] = []
-    t_expands: list[list[list[int]]] = []
-    tl_spans: dict[int, list[int]] = {}
-    line_tags: list[str] = []
-    line_expands: list[list[int]] = []
-    cur_line = 0
-    cur_col = 0
-    cell_ind = 0
-    colnum = 0
-
-    toks = list(structure_tokens)
-    for i, tok in enumerate(toks):
-        if tok in ("<thead>", "<tbody>"):
-            continue
-        prev_tok = toks[i - 1] if i > 0 else ""
-        next_tok = toks[i + 1] if i + 1 < len(toks) else ""
-
-        # up-expand fill: insert ucel/xcel continuations from open rowspans
-        if tok in ("<td>", "<td", "</tr>") and cur_line > 0:
-            prev_exp = t_expands[cur_line - 1]
-            if cur_col >= len(prev_exp):
-                return None  # reference: return False, {}   (otsl.py:359-361)
-            up = prev_exp[cur_col]
-            while up[1] > 0:
-                if up[0] == 0:
-                    line_tags.append("ucel")
-                    line_expands.append([0, up[1] - 1])
-                    cur_col += 1
-                else:
-                    for ci in range(up[0]):
-                        line_tags.append("xcel")
-                        line_expands.append([up[0] - ci, up[1] - 1])
-                        cur_col += 1
-                up = prev_exp[cur_col]  # may IndexError, like the reference
-
-        # trailing-ucel fix: previous row longer than this one
-        if tok == "</tr>" and cur_line > 0:
-            pre_len = len(t_expands[cur_line - 1])  # incl. [-1,-1] terminator
-            cur_len = len(line_expands)  # frozen BEFORE the fill loop (:383)
-            extra = pre_len - cur_len - 1
-            for clm in range(max(extra, 0)):
-                up = t_expands[cur_line - 1][cur_len + clm]
-                if up[0] == 0:
-                    line_tags.append("ucel")
-                    line_expands.append([0, up[1] - 1])
-                else:
-                    line_tags.append("xcel")
-                    line_expands.append([up[0], up[1] - 1])
-
-        # opening cell tag (both '<td>' and attribute-carrying '<td')
-        if tok in ("<td>", "<td"):
-            empty = bool(cell_is_empty[cell_ind]) if cell_is_empty else False
-            line_tags.append("ecel" if empty else "fcel")
-            line_expands.append([0, 0])
-            cell_ind += 1
-            cur_col += 1
-
-        # closing row tag
-        if tok == "</tr>":
-            colnum = max(colnum, len(line_tags))
-            line_tags.append("nl")
-            t_cells.append(list(line_tags))
-            tl_cells.extend(line_tags)
-            line_tags = []
-            line_expands.append([-1, -1])
-            t_expands.append(line_expands)
-            line_expands = []
-            cur_col = 0
-            cur_line += 1
-
-        # colspan-only
-        cs = _attr_span(tok, "colspan")
-        if cs is not None and _attr_span(prev_tok, "rowspan") is None and _attr_span(
-            next_tok, "rowspan"
-        ) is None:
-            tl_spans[cell_ind - 1] = [cs, 1]
-            line_expands[-1] = [cs, 0]
-            for ci in range(cs - 1):
-                line_tags.append("lcel")
-                line_expands.append([cs - ci - 1, 0])
-                cur_col += 1
-
-        # rowspan-only
-        rs = _attr_span(tok, "rowspan")
-        if rs is not None:
-            prev_cs = _attr_span(prev_tok, "colspan")
-            next_cs = _attr_span(next_tok, "colspan")
-            if prev_cs is None and next_cs is None:
-                tl_spans[cell_ind - 1] = [1, rs]
-                line_expands[-1] = [0, rs - 1]
-            # 2-D spans: QUIRK — xcel appended WITHOUT advancing cur_col
-            for cs2 in (prev_cs, next_cs):
-                if cs2 is not None:
-                    tl_spans[cell_ind - 1] = [cs2, rs]
-                    line_expands[-1] = [cs2, rs - 1]
-                    for ci in range(cs2 - 1):
-                        line_tags.append("xcel")
-                        line_expands.append([cs2 - ci - 1, rs - 1])
-
-    if not is_square(tl_cells):
-        tl_cells = pad_to_square(tl_cells, "fcel")
-    return OtslTable(
-        tags=tl_cells, spans=tl_spans, rows=len(t_cells), cols=colnum
-    )

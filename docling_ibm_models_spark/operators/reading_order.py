@@ -1,30 +1,26 @@
-"""Rule-based reading order + caption/footnote linking — from scratch.
+"""Rule-based reading order — from scratch.
 
 Re-creates the observable behavior of the reference's
 ReadingOrderPredictor
 (/root/reference/docling_ibm_models/reading_order/reading_order_rb.py):
 per-page header/body/footer partition (:89-95), "just-above" dominance DAG
 (:309-360), optional horizontal dilation (:362-403), geometric head sort
-(:405-428, via PageElement.__lt__ :35-43), DFS with up-search (:444-490),
-caption linking (:492-608), footnote linking (:610-633) and hyphenation
-merges (:170-211). The reference is not importable here (docling_core not
-installed), so geometry predicates follow the public docling-core
-BoundingBox semantics (bottom-left origin, eps=1e-3). Correctness is
-established two ways (tests/test_reading_order.py): behaviorally per the
-reference's own protocol (Spearman ≥ 0.9 per page on shuffled synthetic
-layouts, caption/footnote link accuracy — mirrors
-/root/reference/tests/test_reading_order.py:142-151,244-246), and by TRUE
-parity against the reference module imported with a faked docling_core
-sharing this geometry vocabulary — order, caption links, footnote links
-and merges all match exactly on randomized layouts.
+(:405-428, via PageElement.__lt__ :35-43) and DFS with up-search
+(:444-490). The reference's caption/footnote linking and hyphenation
+merges are not ported: no query or pipeline stage consumes them. The
+reference is not importable here (docling_core not installed), so geometry
+predicates follow the public docling-core BoundingBox semantics
+(bottom-left origin, eps=1e-3). Correctness is established two ways
+(tests/test_reading_order.py): behaviorally per the reference's own
+protocol (Spearman ≥ 0.9 per page on shuffled synthetic layouts — mirrors
+/root/reference/tests/test_reading_order.py:142-151), and by TRUE parity
+of the order against the reference module imported with a faked
+docling_core sharing this geometry vocabulary, on randomized layouts.
 
 Notes on reference quirks mirrored here:
 * ``l2r_map`` is permanently disabled (guard ``False`` at :302) — kept
   out entirely, and the ``is_horizontally_connected`` computation at
-  :337-342 is dead (never used in the decision) — omitted;
-* ``predict_merges``'s furniture-skip loop compares an *element* to a list
-  of labels (:185-192) — always False, so it never skips; mirrored by
-  simply not skipping.
+  :337-342 is dead (never used in the decision) — omitted.
 
 Spark integration: one document's elements fit trivially in memory
 (≤ hundreds), so the Spark layer runs this per url via ``applyInPandas``
@@ -35,7 +31,6 @@ Spark integration: one document's elements fit trivially in memory
 from __future__ import annotations
 
 import copy
-import re
 from dataclasses import dataclass
 
 EPS = 1.0e-3
@@ -199,107 +194,3 @@ def predict_reading_order(elements: list[Element], dilate: bool = True) -> list[
             group = by_page[p][kind]
             out.extend(group[i] for i in _order_page(group, dilate))
     return out
-
-
-def find_to_captions(sorted_elements: list[Element]) -> dict[int, list[int]]:
-    """Caption → table/picture/code linking per page (reference
-    :117-142,492-608): two-pass assignment, then overlap resolution keeping
-    for each caption the nearest unused target."""
-    result: dict[int, list[int]] = {}
-    pages = sorted({e.page_no for e in sorted_elements})
-    for p in pages:
-        elems = [e for e in sorted_elements if e.page_no == p]
-        from_cap: dict[int, tuple[list[int], list[int]]] = {
-            e.cid: ([], []) for e in elems if e.label == CAPTION
-        }
-        targets = (TABLE, PICTURE, CODE)
-        for ind, e in enumerate(elems):
-            if e.label != CAPTION:
-                continue
-            k = ind - 1
-            while k >= 0 and elems[k].label in targets:
-                from_cap[e.cid][0].append(elems[k].cid)
-                k -= 1
-            k = ind + 1
-            while k < len(elems) and elems[k].label in targets:
-                from_cap[e.cid][1].append(elems[k].cid)
-                k += 1
-
-        to_cap: dict[int, list[int]] = {}
-        assigned: set[int] = set()
-        for cid, (before, after) in from_cap.items():
-            if not before and after:
-                for t in after:
-                    to_cap.setdefault(t, [])
-                    if cid not in to_cap[t]:
-                        to_cap[t].append(cid)
-                    assigned.add(t)
-            if before and not after:
-                for t in before:
-                    to_cap.setdefault(t, [])
-                    if cid not in to_cap[t]:
-                        to_cap[t].append(cid)
-                    assigned.add(t)
-        for cid, (before, after) in from_cap.items():
-            before[:] = [t for t in before if t not in assigned]
-            after[:] = [t for t in after if t not in assigned]
-        for cid, (before, after) in from_cap.items():
-            if not before and after:
-                for t in after:
-                    to_cap[t] = [cid]
-                    assigned.add(t)
-            if before and not after:
-                for t in before:
-                    to_cap[t] = [cid]
-                    assigned.add(t)
-
-        used: set[int] = set()
-        for key in sorted(to_cap):
-            valid = [v for v in sorted(to_cap[key], key=lambda v: abs(v - key)) if v not in used]
-            if valid:
-                result[key] = [valid[0]]
-                used.add(valid[0])
-    return result
-
-
-def find_to_footnotes(sorted_elements: list[Element]) -> dict[int, list[int]]:
-    """Table/picture → consecutive following footnotes (reference
-    :144-168,610-633)."""
-    out: dict[int, list[int]] = {}
-    pages = sorted({e.page_no for e in sorted_elements})
-    for p in pages:
-        elems = [e for e in sorted_elements if e.page_no == p]
-        for ind, e in enumerate(elems):
-            if e.label in (TABLE, PICTURE):
-                k = ind + 1
-                while k < len(elems) and elems[k].label == FOOTNOTE:
-                    out.setdefault(e.cid, []).append(elems[k].cid)
-                    k += 1
-    return out
-
-
-_TAIL_RE = re.compile(r".+([a-z,\-])(\s*)")
-_HEAD_RE = re.compile(r"(\s*[a-z])(.+)")
-
-
-def predict_merges(sorted_elements: list[Element]) -> dict[int, list[int]]:
-    """Hyphenation/continuation merges between consecutive TEXT elements
-    (reference :170-211; its furniture-skip comparison is a no-op, so the
-    next element is always ind+1)."""
-    merges: dict[int, list[int]] = {}
-    cur = -1
-    for ind, e in enumerate(sorted_elements):
-        if ind <= cur or e.label != TEXT:
-            continue
-        j = ind + 1
-        if j >= len(sorted_elements):
-            continue
-        nxt = sorted_elements[j]
-        # the reference's guard (:199) compares page_no to a *label* —
-        # always True — so its effective condition is label equality only;
-        # mirrored here
-        if nxt.label == e.label:
-            if _TAIL_RE.fullmatch(e.text) and _HEAD_RE.fullmatch(nxt.text):
-                merges[e.cid] = [nxt.cid]
-                cur = j
-    return merges

@@ -2,8 +2,7 @@
 
 Re-creates the deterministic output-shaping half of the reference's
 TFPredictor (/root/reference/docling_ibm_models/tableformer/data_management/
-tf_predictor.py): bbox/tag sync repair (A10, :219-269), page↔table
-coordinate transforms (P16, :271-313), de-padding (P17, :315-367), the
+tf_predictor.py): bbox/tag sync repair (A10, :219-269), the
 docling-output ↔ pdf-cell merge (J4, :369-425), the response-generation
 join (J5, :891-986) and the row/col index compaction (A11, :502-564 inline
 in multi_table_predict). Parity is verified in
@@ -17,36 +16,6 @@ SURVEY.md §2.4.
 """
 
 from __future__ import annotations
-
-import numpy as np
-
-
-def resize_plan(h: int, w: int, width: int | None = None, height: int | None = None):
-    """P3 — the semantic half of the reference's ``resize_img``
-    (tf_predictor.py:427-455): target dimensions + scale factor. The pixel
-    resample itself is cv2.INTER_AREA (stubbed elsewhere — no cv2 here);
-    the scale factor is what propagates into table-bbox scaling and the
-    crop rounding in multi_table_predict (:469-481)."""
-    if width is None and height is None:
-        return None, 1.0
-    if width is None:
-        r = height / float(h)
-        return (int(w * r), height), r
-    r = width / float(w)
-    return (width, int(h * r)), r
-
-
-def scale_table_bbox(table_bbox, scale_factor):
-    """multi_table_predict's bbox downscale + crop-slice rounding
-    (tf_predictor.py:471-481): returns (scaled_bbox, crop_slices)."""
-    scaled = [c * scale_factor for c in table_bbox]
-    crops = (
-        round(scaled[1]),
-        round(scaled[3]),
-        round(scaled[0]),
-        round(scaled[2]),
-    )
-    return scaled, crops
 
 
 def delete_bboxes_at(bboxes, indexes):
@@ -78,33 +47,6 @@ def check_bbox_sync(prediction):
     if len(prediction["bboxes"]) != count_td:
         return False, remove_bbox_span_desync(prediction)
     return True, prediction["bboxes"]
-
-
-def page_coords_to_table_coords(bbox, table_bbox, im_width, im_height):
-    """P16 — page (bottom-left origin) → table-image (top-left) coords
-    (:271-313)."""
-    tx1, ty1, tx2, ty2 = table_bbox[0], table_bbox[1], table_bbox[2], table_bbox[3]
-    tw = tx2 - tx1
-    th = ty2 - ty1
-    return [
-        im_width * (bbox[0] - tx1) / tw,
-        im_height * (ty2 - bbox[3]) / th,
-        im_width * (bbox[2] - tx1) / tw,
-        im_height * (ty2 - bbox[1]) / th,
-    ]
-
-
-def depad_bboxes(bboxes, new_image_ratio):
-    """P17 — undo center padding on normalized bboxes, clipped to [0,1]
-    (:315-367)."""
-    out = []
-    for bbox in bboxes:
-        vals = []
-        for i, c in enumerate(bbox):
-            v = (c - 0.5) * new_image_ratio + 0.5
-            vals.append(float(np.clip(v, 0.0, 1.0)))
-        out.append(vals)
-    return out
 
 
 def merge_tf_output(docling_output, pdf_cells):
@@ -198,35 +140,6 @@ def generate_tf_response(table_cells, matches):
         l_labels = list(labels)
         cell["label"] = l_labels[0] if l_labels else "None"
         out.append(cell)
-    return out
-
-
-def generate_tf_response_dummy(table_cells):
-    """J5 dummy variant — no matching: propagate predicted cell bboxes
-    directly (reference _generate_tf_response_dummy, tf_predictor.py:838-889;
-    used by predict_dummy / do_matching=False)."""
-    out = []
-    for t in table_cells:
-        cs = t.get("colspan_val", 1)
-        rs = t.get("rowspan_val", 1)
-        b = t["bbox"]
-        out.append(
-            {
-                "cell_id": t["cell_id"],
-                "bbox": {"b": b[3], "l": b[0], "r": b[2], "t": b[1], "token": ""},
-                "row_span": rs,
-                "col_span": cs,
-                "start_row_offset_idx": t["row_id"],
-                "end_row_offset_idx": t["row_id"] + rs,
-                "start_col_offset_idx": t["column_id"],
-                "end_col_offset_idx": t["column_id"] + cs,
-                "indentation_level": 0,
-                "text_cell_bboxes": [],
-                "column_header": t["label"] == "ched",
-                "row_header": t["label"] == "rhed",
-                "row_section": t["label"] == "srow",
-            }
-        )
     return out
 
 

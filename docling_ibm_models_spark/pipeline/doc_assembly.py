@@ -11,11 +11,8 @@ then assembled JVM-side with a sort-aggregate over
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from docling_ibm_models_spark import schemas
 from docling_ibm_models_spark.operators.reading_order import (
@@ -56,23 +53,3 @@ def order_elements(elements: DataFrame, num_partitions: int | None = None) -> Da
     )
 
 
-def assemble_doc_text(ordered: DataFrame) -> DataFrame:
-    """Ordered elements → one row per url with the linear main-content
-    text (blocks joined by a blank line, furniture labels dropped) —
-    JVM-side sort-aggregate, no Python."""
-    body = ordered.where(~F.col("label").isin("page_header", "page_footer"))
-    return (
-        body.groupBy("url")
-        .agg(
-            F.concat_ws(
-                "\n\n",
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("reading_rank", "text"))
-                    ),
-                    lambda x: x["text"],
-                ),
-            ).alias("doc_text"),
-            F.count(F.lit(1)).alias("n_elements"),
-        )
-    )

@@ -3296,7 +3296,7 @@ def warc_wet_roundtrip(spark, sf_dir):
     Plan shape: the producer is a cached fixture (like the WARC corpus);
     the verified path is two narrow scans (WET archives, truth pages) +
     one url join — the verification join itself. The production sink
-    (``write_wet_archives``) is a zero-shuffle one-pass map over the
+    (``_write_archives``) is a zero-shuffle one-pass map over the
     extraction output. [CC WET layout, public spec; engine addition]"""
     from docling_ibm_models_spark.sources.pages_source import cached_pages
     from docling_ibm_models_spark.sources.warc_source import (
@@ -4193,37 +4193,6 @@ def _pagerank_frames(spark, sf_dir):
     )
     outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).cast("double").alias("od"))
     return d, n_df, outdeg, edges.join(outdeg, "src")
-
-
-def pagerank_iteration_frame(spark, sf_dir):
-    """One symbolic (unmaterialized) PageRank iteration — the plan the
-    test suite audits for join strategy / no-cartesian properties."""
-    d, n_df, outdeg, ew = _pagerank_frames(spark, sf_dir)
-    ranks = d.crossJoin(F.broadcast(n_df)).select(
-        "doc_id", (F.lit(1.0) / F.col("n")).alias("r")
-    )
-    dang = ranks.join(
-        outdeg.select("src"), ranks["doc_id"] == F.col("src"), "left_anti"
-    ).agg(F.coalesce(F.sum("r"), F.lit(0.0)).alias("dm"))
-    contrib = (
-        ew.join(ranks, ew["src"] == ranks["doc_id"])
-        .groupBy("dst")
-        .agg(F.sum(F.col("r") / F.col("od")).alias("c"))
-        .select(F.col("dst").alias("cdst"), "c")
-    )
-    return (
-        d.join(contrib, d["doc_id"] == F.col("cdst"), "left")
-        .crossJoin(F.broadcast(dang))
-        .crossJoin(F.broadcast(n_df))
-        .select(
-            "doc_id",
-            (
-                F.lit(0.15) / F.col("n")
-                + F.lit(0.85)
-                * (F.coalesce(F.col("c"), F.lit(0.0)) + F.col("dm") / F.col("n"))
-            ).alias("r"),
-        )
-    )
 
 
 @register("link_pagerank", oracle=_pagerank_oracle())

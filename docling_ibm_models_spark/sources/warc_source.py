@@ -7,10 +7,10 @@ records of plain text). Public-spec-only code (ISO 28500 WARC/1.0/1.1;
 RFC 1952 gzip). One writer, parser, Spark scan and archive sink serve
 both record kinds; a :class:`_Kind` holds only what differs.
 
-* :func:`write_warc` / :func:`write_wet` — deterministic writer used by
-  tests/benches, in the three layouts seen in the wild: plain, one gzip
-  stream, and Common Crawl's one gzip *member per record* (which is what
-  makes CC archives seekable by CDX offset).
+* :func:`_write_archive` — deterministic writer in the three layouts seen
+  in the wild: plain, one gzip stream, and Common Crawl's one gzip *member
+  per record* (which is what makes CC archives seekable by CDX offset);
+  :func:`_write_archives` runs it per partition as the Spark archive sink.
 * :func:`iter_warc_records` — incremental parser: gzip members are
   decompressed one at a time with ``zlib.decompressobj`` and records are
   scanned from a rolling buffer, so peak memory is one record + one
@@ -182,7 +182,7 @@ def _gzip_member(records: list[bytes]) -> bytes:
 def _write_archive(kind: _Kind, path: str, records: list[tuple], compression: str) -> int:
     """Write ``records`` = [(url, warc_ts, payload), ...] as ``kind``
     records after one leading warcinfo record, in the ``compression``
-    layout of :func:`write_warc`; returns the record count."""
+    layout (``record``, ``file`` or ``none``); returns the record count."""
     info_ts = (records[0][1] if records else _dt.datetime(2024, 1, 1, tzinfo=_dt.timezone.utc))
     raw_records = [_warc_record("warcinfo", None, info_ts, "application/warc-fields", kind.info)]
     for url, ts, payload in records:
@@ -199,33 +199,6 @@ def _write_archive(kind: _Kind, path: str, records: list[tuple], compression: st
         else:
             raise ValueError(f"unknown compression {compression!r}")
     return len(raw_records)
-
-
-def write_warc(
-    path: str,
-    records: list[tuple[str, _dt.datetime, bytes]],
-    compression: str = "record",
-) -> int:
-    """Write ``records`` = [(url, warc_ts, html_bytes), ...] as a WARC file.
-
-    ``compression``: ``"record"`` (Common Crawl layout — every record its
-    own gzip member, mtime pinned to 0 so output is byte-deterministic),
-    ``"file"`` (one gzip stream), or ``"none"``. Returns record count
-    (including the leading warcinfo record). Deterministic in its inputs —
-    no wall-clock reads; the warcinfo date reuses the first record's ts.
-    """
-    return _write_archive(_RESPONSE, path, records, compression)
-
-
-def write_wet(
-    path: str,
-    records: list[tuple[str, _dt.datetime, str]],
-    compression: str = "record",
-) -> int:
-    """Write ``records`` = [(url, warc_ts, extracted_text), ...] as a WET
-    file (WARC conversion records, text/plain blocks, UTF-8); layouts,
-    determinism and the returned count match :func:`write_warc`."""
-    return _write_archive(_CONVERSION, path, records, compression)
 
 
 # ---------------------------------------------------------------------------
@@ -399,22 +372,6 @@ def _records_to_rows(kind: _Kind, name: str, raw: bytes) -> Iterator[tuple]:
             yield (*_record_fields(kind, headers, block), name, offset)
 
 
-def warc_records_to_rows(
-    name: str, raw: bytes
-) -> Iterator[tuple[str, _dt.datetime | None, bytes, str | None, str, int]]:
-    """All HTTP-response records of one archive as pages-shaped tuples
-    ``(url, warc_ts, html, lang, warc_file, warc_offset)``."""
-    return _records_to_rows(_RESPONSE, name, raw)
-
-
-def wet_records_to_rows(
-    name: str, raw: bytes
-) -> Iterator[tuple[str, _dt.datetime | None, str, str, int]]:
-    """All conversion records of one WET archive as extraction-output-shaped
-    tuples ``(url, warc_ts, extracted_text, warc_file, warc_offset)``."""
-    return _records_to_rows(_CONVERSION, name, raw)
-
-
 def _frames(rows: Iterator[tuple], schema: str) -> Iterator[pd.DataFrame]:
     """``rows`` as pandas frames of at most ``_CHUNK_ROWS`` rows."""
     cols = [field.split()[0] for field in schema.split(",")]
@@ -480,16 +437,6 @@ def _read_record_from(f, offset: int, chunk: int = _FETCH_CHUNK):
         data = f.read(chunk)
         if not data:
             raise ValueError(f"offset {offset}: archive truncated")
-
-
-def read_warc_record_at(path: str, offset: int) -> tuple[dict[str, str], bytes, int]:
-    """Fetch one record by ``(archive path, CDX offset)`` without scanning
-    the archive — seek + single-member decompress. Returns ``(headers,
-    block, compressed_bytes_read)``; ``compressed_bytes_read`` is the
-    evidence that only ~one record's worth of the file was touched."""
-    local = path[5:] if path.startswith("file:") else path
-    with open(local, "rb") as f:
-        return _read_record_from(f, offset)
 
 
 # fetched-record schema: the pages shape plus the read-cost evidence column
@@ -597,25 +544,6 @@ def _write_archives(kind: _Kind, df, out_dir: str, layouts: tuple[str, ...]) -> 
 
     written = df.select("url", "warc_ts", payload).mapInPandas(write_part, "archives int")
     return sum(r.archives for r in written.collect())
-
-
-def write_warc_archives(
-    pages_df, out_dir: str, layouts: tuple[str, ...] = _LAYOUTS
-) -> int:
-    """Write a pages DataFrame ``(url, warc_ts, html, ...)`` as WARC
-    archives, one per partition (pass ``("record", "none")`` for a
-    seekable-only corpus — the whole-file-gzip layout cannot serve CDX
-    point fetches). Returns the number of archives written."""
-    return _write_archives(_RESPONSE, pages_df, out_dir, layouts)
-
-
-def write_wet_archives(
-    text_df, out_dir: str, layouts: tuple[str, ...] = _LAYOUTS
-) -> int:
-    """Write an extraction-output DataFrame ``(url, warc_ts,
-    extracted_text)`` as WET archives, one per partition — the distributed
-    sink a 10^12-doc extraction run ends in. Returns archives written."""
-    return _write_archives(_CONVERSION, text_df, out_dir, layouts)
 
 
 def _cached_archive_dir(spark, sf_dir: str, kind: _Kind, files: int, layouts, rows_of) -> str:

@@ -83,3 +83,39 @@ def random_page(rng: random.Random, n_tokens: int):
             }
         )
     return {"tokens": tokens, "width": 1000, "height": 1200}
+
+
+def grid_prediction(rng: random.Random):
+    """``random_prediction`` with each cell's bbox laid on its row/column
+    slot of the table (jittered), so neighbouring columns and rows can share
+    page tokens the way real table predictions do."""
+    pred = random_prediction(rng)
+    rows: list[list[str]] = [[]]
+    for tag in pred["rs_seq"]:
+        if tag == "nl":
+            rows.append([])
+        else:
+            rows[-1].append(tag)
+    rows = [row for row in rows if row]
+    R, C = len(rows), max(len(row) for row in rows)
+    bboxes = []
+    for y, row in enumerate(rows):
+        for x, tag in enumerate(row):
+            if tag in CELL_TAGS_SYNC:
+                j = [rng.uniform(-0.1, 0.1) for _ in range(4)]
+                bboxes.append([(x + 0.1 + j[0]) / C, (y + 0.1 + j[1]) / R, (x + 0.9 + j[2]) / C, (y + 0.9 + j[3]) / R])
+    pred["bboxes"] = bboxes
+    return pred
+
+
+def random_table_page(rng: random.Random, table_bbox, n_tokens: int):
+    """OCR page whose tokens all fall inside ``table_bbox``, each up to 0.4
+    of the table wide, so many straddle a column boundary."""
+    x0, y0, x1, y1 = table_bbox
+    W, H = x1 - x0, y1 - y0
+    tokens = []
+    for i in range(n_tokens):
+        w, h = rng.uniform(0.03, 0.4) * W, rng.uniform(0.03, 0.15) * H
+        left, top = rng.uniform(x0, x1 - w), rng.uniform(y0, y1 - h)
+        tokens.append({"id": i, "text": f"tok{i}", "bbox": {"l": left, "t": top, "r": left + w, "b": top + h}})
+    return {"tokens": tokens, "width": 1000, "height": 1200}

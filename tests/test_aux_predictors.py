@@ -56,20 +56,6 @@ def test_topk_sort_contract():
     assert preds[1][0] == "chemistry_markush_structure"
 
 
-def test_stub_predictors_deterministic():
-    cf = aux.DeterministicCodeFormulaPredictor()
-    a = cf.predict([b"img1", b"img2"], ["code", "formula"])
-    b = cf.predict([b"img1", b"img2"], ["code", "formula"])
-    assert a == b
-    assert not a[1].endswith("\\\\")  # tail stripped
-
-    fc = aux.DeterministicFigureClassifier()
-    p = fc.predict([b"img1"])[0]
-    assert len(p) == 16
-    assert abs(sum(prob for _, prob in p) - 1.0) < 1e-9
-    assert p == sorted(p, key=lambda t: t[1], reverse=True)
-
-
 def test_predict_input_validation_reference_scenarios():
     """The reference's deterministic predict() input contract
     (tests/test_code_formula_predictor.py:63-111): bad temperature type ->
@@ -77,26 +63,21 @@ def test_predict_input_validation_reference_scenarios():
     mismatch -> Exception, unsupported image type -> TypeError."""
     import pytest as _pytest
 
-    from docling_ibm_models_spark.models.aux_predictors import (
-        DeterministicCodeFormulaPredictor,
-        validate_predict_inputs,
-    )
+    from docling_ibm_models_spark.models.aux_predictors import validate_predict_inputs
 
-    p = DeterministicCodeFormulaPredictor()
     img = b"\x00" * 10
 
     with _pytest.raises(TypeError):
-        p.predict(["wrong"], ["code"])
+        validate_predict_inputs(["wrong"], ["code"])
     with _pytest.raises(Exception):
-        p.predict([img], ["code"], "0.1")
+        validate_predict_inputs([img], ["code"], "0.1")
     with _pytest.raises(Exception):
-        p.predict([img], ["code"], -0.1)
+        validate_predict_inputs([img], ["code"], -0.1)
     with _pytest.raises(Exception):
-        p.predict([img], ["code"], None)
+        validate_predict_inputs([img], ["code"], None)
     with _pytest.raises(Exception):
-        p.predict([img], ["code", "code"])
+        validate_predict_inputs([img], ["code", "code"])
     # valid forms pass; do_sample mirrors the temperature==0 switch
-    assert p.predict([img], ["code"], 0.0)
     assert validate_predict_inputs([img], ["x"], 0) is False
     assert validate_predict_inputs([img], ["x"], 0.5) is True
 
@@ -104,11 +85,9 @@ def test_predict_input_validation_reference_scenarios():
 def test_figure_classifier_rejects_unsupported_payload():
     import pytest as _pytest
 
-    from docling_ibm_models_spark.models.aux_predictors import (
-        DeterministicFigureClassifier,
-    )
+    from docling_ibm_models_spark.models.aux_predictors import FigureClassifierVision
 
     with _pytest.raises(TypeError):
-        DeterministicFigureClassifier().predict(["wrong"])
-    out = DeterministicFigureClassifier().predict([b"ok"])
+        FigureClassifierVision().predict(["wrong"])
+    out = FigureClassifierVision().predict([b"ok"])
     assert out and out[0][0][1] >= out[0][-1][1]  # sorted desc by confidence

@@ -151,8 +151,8 @@ def test_encoder_input_prep_matches_reference_statements(weights, ref):
 
 
 def test_positional_encoding_parity():
-    """transformer_rs.py:18-35 PositionalEncoding table + forward, the
-    reference class executed under torch_np."""
+    """transformer_rs.py:18-35 PositionalEncoding table, the reference
+    class executed under torch_np."""
     ref_import.install()
     import docling_ibm_models.tableformer.models.table04_rs.transformer_rs as tr
 
@@ -161,16 +161,6 @@ def test_positional_encoding_parity():
     pe_mod = tr.PositionalEncoding(d_model=64, dropout=0.1, max_len=128)
     table = bnp.positional_encoding_table(64, max_len=128)
     np.testing.assert_allclose(table, pe_mod.pe.a, rtol=0, atol=0)
-
-    rng = np.random.default_rng(3)
-    emb_table = rng.normal(0.0, 0.2, (13, 64))
-    ids = rng.integers(0, 13, (1, 9))
-    # reference composition: embedding -> permute(1,0,2) -> +pe (eval dropout)
-    emb = torch_np.Embedding(13, 64)
-    emb.weight = emb_table
-    ref_tgt = pe_mod(emb(torch_np.Tensor(ids)).permute(1, 0, 2))
-    mine = bnp.embed_with_positions(emb_table, table, ids)
-    np.testing.assert_allclose(mine, ref_tgt.a, rtol=1e-12, atol=0)
 
 
 def test_encoder04_parity():

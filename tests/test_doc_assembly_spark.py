@@ -2,14 +2,9 @@
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from docling_ibm_models_spark import schemas
 from docling_ibm_models_spark.operators.reading_order import predict_reading_order
-from docling_ibm_models_spark.pipeline.doc_assembly import (
-    assemble_doc_text,
-    order_elements,
-)
+from docling_ibm_models_spark.pipeline.doc_assembly import order_elements
 from docling_ibm_models_spark.sources.elements_source import (
     shuffled,
     synth_page_elements,
@@ -42,12 +37,3 @@ def test_spark_reading_order_matches_local(spark):
     for r in sorted(out, key=lambda r: (r.url, r.reading_rank)):
         got.setdefault(r.url, []).append(r.cid)
     assert got == expected
-
-    # assembly: body text in rank order, furniture dropped
-    doc = assemble_doc_text(order_elements(df)).where(F.col("url") == "doc-0").collect()[0]
-    exp_texts = [
-        f"text-{c}" for c in expected["doc-0"]
-        if next(e for e in synth_page_elements(0) if e.cid == c).label
-        not in ("page_header", "page_footer")
-    ]
-    assert doc.doc_text == "\n\n".join(exp_texts)

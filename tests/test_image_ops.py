@@ -1,90 +1,23 @@
-"""P3 pixel resample: numpy INTER_AREA (operators/image_ops.py) behavioral
-tests. cv2 is not installed in-container, so parity is pinned to the
-publicly documented INTER_AREA algorithm (exact area means when shrinking,
-modified bilinear when zooming) rather than recorded cv2 goldens; the
-integer-shrink and zoom-by-2 cases below are exact cv2 invariants."""
+"""Numpy image preprocessing (operators/image_ops.py): the TableFormer
+normalize → cv2-bilinear resize → transpose chain and the PIL-bilinear
+preprocessing of the code-formula and figure-classifier predictors. cv2,
+torch and PIL are not installed in-container, so these pin the publicly
+documented algorithms rather than recorded library goldens."""
 
 from __future__ import annotations
 
 import numpy as np
-import pytest
 
-from docling_ibm_models_spark.operators import response_gen
 from docling_ibm_models_spark.operators import image_ops
-from docling_ibm_models_spark.operators.image_ops import resize_img
-
-
-def test_identity_when_no_dims():
-    img = np.arange(12, dtype=np.uint8).reshape(3, 4)
-    out, sf = resize_img(img)
-    assert sf == 1.0 and out is img
-
-
-def test_integer_shrink_is_exact_box_mean():
-    img = np.array(
-        [[0, 2, 4, 6], [8, 10, 12, 14], [16, 18, 20, 22], [24, 26, 28, 30]],
-        dtype=np.float64,
-    )
-    out, sf = resize_img(img, height=2)
-    assert sf == 0.5 and out.shape == (2, 2)
-    # each output pixel = mean of its 2x2 block
-    assert np.allclose(out, [[5.0, 9.0], [21.0, 25.0]])
-
-
-def test_fractional_shrink_weights():
-    # 3 -> 2 rows: out[0] = (p0 + 0.5*p1) / 1.5, out[1] = (0.5*p1 + p2) / 1.5
-    img = np.array([[3.0, 3.0, 3.0], [6.0, 6.0, 6.0], [9.0, 9.0, 9.0]])
-    out, _ = resize_img(img, height=2)  # cols 3 -> int(3*2/3) = 2
-    assert out.shape == (2, 2)
-    assert np.allclose(out[:, 0], [(3 + 0.5 * 6) / 1.5, (0.5 * 6 + 9) / 1.5])
-
-
-def test_zoom_by_two_is_nearest():
-    # cv2 INTER_AREA zoom: fx = (dx+1) - (sx+1)*dst/src == 0 for integer
-    # factors -> pixel duplication
-    img = np.array([[1.0, 2.0], [3.0, 4.0]])
-    out, sf = resize_img(img, height=4)
-    assert sf == 2.0
-    assert np.allclose(
-        out,
-        [[1, 1, 2, 2], [1, 1, 2, 2], [3, 3, 4, 4], [3, 3, 4, 4]],
-    )
-
-
-def test_uint8_rounding_and_dtype():
-    img = np.array([[10, 11], [12, 14]], dtype=np.uint8)
-    out, _ = resize_img(img, height=1)
-    assert out.dtype == np.uint8
-    # mean = 11.75 -> rint 12
-    assert out.tolist() == [[12]]
-
-
-def test_three_channel_page_resize_matches_plan():
-    rng = np.random.default_rng(7)
-    img = rng.integers(0, 256, size=(1612, 1240, 3), dtype=np.uint8)
-    out, sf = resize_img(img, height=1024)
-    dim, sf_plan = response_gen.resize_plan(1612, 1240, height=1024)
-    assert sf == sf_plan
-    assert out.shape == (dim[1], dim[0], 3)
-    # area mean preserves global brightness closely
-    assert abs(float(out.mean()) - float(img.mean())) < 1.0
-
-
-@pytest.mark.parametrize("h,w,target", [(7, 5, 3), (11, 4, 11), (5, 9, 20)])
-def test_weights_partition_of_unity(h, w, target):
-    img = np.full((h, w), 42.0)
-    out, _ = resize_img(img, height=target)
-    assert np.allclose(out, 42.0)
-
-
-# ---- TableFormer preprocessing chain (P1/P2/P4-P8) --------------------------
-
-from docling_ibm_models_spark.operators.image_ops import (  # noqa: E402
+from docling_ibm_models_spark.operators.image_ops import (
     prepare_image,
     resize_bilinear,
     tf_normalize,
     tf_resize,
 )
+
+
+# ---- TableFormer preprocessing chain (P1/P2/P4-P8) --------------------------
 
 
 def test_tf_normalize_formula_quirk():
@@ -133,10 +66,6 @@ def test_prepare_image_shape_and_range():
 def test_three_channel_zoom_and_bilinear():
     rng = np.random.default_rng(11)
     img = rng.integers(0, 256, size=(6, 5, 3), dtype=np.uint8)
-    up, sf = resize_img(img, height=12)  # zoom path, 3 channels
-    assert up.shape == (12, 10, 3) and sf == 2.0
-    # integer zoom = duplication per the INTER_AREA zoom formula
-    assert np.array_equal(up[::2, ::2], img)
     bl = resize_bilinear(img.astype(np.float64), 10, 12)
     assert bl.shape == (12, 10, 3)
     # channels stay independent: a constant channel stays constant

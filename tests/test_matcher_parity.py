@@ -51,15 +51,3 @@ def test_match_cells_parity(seed):
         "table_bbox",
     ):
         assert got[key] == ref[key], f"mismatch in {key}"
-
-
-@pytest.mark.parametrize("seed", range(15))
-def test_iou_match_parity(seed):
-    rng = random.Random(9500 + seed)
-    pred = random_prediction(rng)
-    page = random_page(rng, rng.randint(1, 60))
-    table_bbox = [50.0, 100.0, 900.0, 1100.0]
-    bboxes_page = ours.translate_bboxes(table_bbox, pred["bboxes"])
-    cells = ours.build_table_cells(pred["html_seq"], pred["rs_seq"], bboxes_page, pred["classes"])
-    pdf_cells = ours.normalize_pdf_cells(page["tokens"])
-    assert ours.match_iou(cells, pdf_cells, 0.05) == REF._iou_match(cells, pdf_cells)

@@ -136,35 +136,6 @@ def test_typeset_deterministic():
     assert any(t["t"] > a[0]["t"] for t in a)  # wrapped to multiple lines
 
 
-def test_quantized_weight_broadcast_roundtrip(spark):
-    """int8-symmetric quantize -> broadcast -> executor-side dequantize:
-    ~4x smaller payload, max abs error bounded by scale/2, non-array
-    entries untouched."""
-    import numpy as np
-
-    from docling_ibm_models_spark.models import harness
-
-    rng = np.random.default_rng(5)
-    w = {
-        "conv1": rng.standard_normal((64, 32)).astype(np.float32),
-        "bias": rng.standard_normal(64).astype(np.float64),
-        "grid_bias": 3,
-        "label_map": {"0": "text"},
-    }
-    q = harness.quantize_weights(w)
-    assert q["conv1"]["__quant__"] == "int8-symmetric"
-    assert q["conv1"]["q"].dtype == np.int8
-    assert q["grid_bias"] == 3 and q["label_map"] == w["label_map"]
-    assert q["conv1"]["q"].nbytes * 4 == w["conv1"].nbytes
-
-    bc = harness.broadcast_weights_quantized(spark, w)
-    d = harness.dequantize_weights(bc.value)
-    for k in ("conv1", "bias"):
-        scale = q[k]["scale"]
-        assert np.max(np.abs(d[k] - w[k])) <= scale / 2 + 1e-7, k
-    assert d["grid_bias"] == 3
-
-
 def test_code_formula_stage_real_vision_path(spark, page_recs):
     """M7 stage: Code/Formula clusters → real preprocessing + SAM forward
     (parity-tested numerics) → text + features. The Spark-served features

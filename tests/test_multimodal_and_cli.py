@@ -6,13 +6,10 @@ import json
 import subprocess
 import sys
 
-import pytest
 from pyspark.sql import functions as F
 
 from docling_ibm_models_spark.operators.multimodal import (
-    decode_image,
     fake_features,
-    frame_sample_stage,
     media_metadata_stage,
     sniff_mime,
 )
@@ -30,11 +27,6 @@ def test_sniff_mime():
     assert sniff_mime(None) == "application/octet-stream"
 
 
-def test_decode_is_stubbed():
-    with pytest.raises(NotImplementedError):
-        decode_image(b"\x89PNG\r\n\x1a\n")
-
-
 def test_fake_features_deterministic():
     assert fake_features(b"abc") == fake_features(b"abc")
     assert fake_features(b"abc") != fake_features(b"abd")
@@ -50,17 +42,6 @@ def test_media_metadata_stage(spark):
         assert r.n_bytes > 0
         assert len(r.content_hash) == 32
         assert len(r.features) == 16
-
-
-def test_frame_sample_stage(spark):
-    pages = pages_from_documents(spark, SF_SMALL).limit(10)
-    frames = frame_sample_stage(pages, every=1024).collect()
-    assert len(frames) > 10  # multiple frames per page
-    by_url = {}
-    for r in frames:
-        by_url.setdefault(r.url, []).append(r.frame_idx)
-    for idxs in by_url.values():
-        assert sorted(idxs) == list(range(len(idxs)))  # dense frame ids
 
 
 def test_salt_partition_balances_hostile_skew(spark):

@@ -70,56 +70,6 @@ def test_html_to_otsl_parity(seed, ref_otsl):
         assert ours.tags == ref["html"]["structure"]["tokens"], (toks, empties)
 
 
-@pytest.mark.parametrize("seed", range(200))
-def test_html_to_otsl_ref_tag_stream_parity(seed, ref_otsl):
-    """FULL tag-stream parity (incl. 2D-span tables where the reference's
-    xcel cursor quirk corrupts the stream) via html_to_otsl_ref. When the
-    quirk trips the reference's :359 guard (ok=False), ours returns None;
-    when the reference raises IndexError mid-stream, ours must too."""
-    rng = random.Random(1_000_003 + seed)
-    toks, empties = random_grid_table(rng)
-    table = {
-        "split": "t",
-        "filename": "t",
-        "html": {
-            "structure": {"tokens": list(toks)},
-            "cells": [{"tokens": ([] if e else ["f"])} for e in empties],
-        },
-    }
-    try:
-        ok, ref = ref_otsl.html_to_otsl(table, None, False, False, True, False)
-    except IndexError:
-        with pytest.raises(IndexError):
-            otsl_ops.html_to_otsl_ref(toks, empties)
-        return
-    ours = otsl_ops.html_to_otsl_ref(toks, empties)
-    if not ok:
-        assert ours is None, (toks, empties)
-        return
-    assert ours is not None
-    assert ours.tags == ref["html"]["structure"]["tokens"], (toks, empties)
-    assert {k: v for k, v in ours.spans.items()} == ref["otsl_spans"]
-    assert ours.cols == ref["cols"]
-    assert ours.rows == ref["rows"]
-
-
-def test_quirk_divergence_pinned():
-    """Pin the exact effect of the reference's 2D-span cursor bug: the
-    random table at seed 1_000_075 emits a stream where rows AFTER a
-    colspan+rowspan cell read the wrong up-expand column (fcel/ucel
-    positions swap vs the true grid). html_to_otsl stays clean;
-    html_to_otsl_ref reproduces the corruption byte-for-byte (asserted vs
-    the live reference in test_html_to_otsl_ref_tag_stream_parity)."""
-    rng = random.Random(1_000_003 + 72)
-    toks, empties = random_grid_table(rng)
-    assert _has_2d_span(toks)
-    clean = otsl_ops.html_to_otsl(toks, empties).tags
-    quirk = otsl_ops.html_to_otsl_ref(toks, empties).tags
-    assert clean != quirk
-    # row 2 of the fixture: the 2D span's lagging cursor swaps fcel/ucel
-    assert clean[11:13] == ["ucel", "fcel"] and quirk[11:13] == ["fcel", "ucel"]
-
-
 @pytest.mark.parametrize("seed", range(40))
 def test_otsl_spans_inference_surface_parity(seed, ref_otsl):
     """The inference path (tf_cell_matcher.py:264-269) feeds otsl_to_html
@@ -173,32 +123,3 @@ def test_square_check_and_pad_parity(seed, ref_otsl):
     assert otsl_ops.clean(tags + ["<pad>", "<end>"]) == ref_otsl.otsl_clean(
         tags + ["<pad>", "<end>"]
     )
-
-
-def test_sync_check_parity(ref_otsl):
-    tags = ["fcel", "ecel", "lcel", "nl", "ucel", "ched", "srow", "nl"]
-    for n in range(8):
-        assert otsl_ops.tags_cells_in_sync(tags, n) == ref_otsl.otsl_tags_cells_sync_chk(
-            tags, [{}] * n, "t", False
-        )
-
-
-@pytest.mark.parametrize(
-    "attr",
-    ['  colspan="2"', ' colspan="2" ', ' colspan="02"', ' colspan="21"',
-     'colspan="2"', ' rowspan="0"'],
-    ids=["two-space", "trailing-space", "zero-padded", "out-of-range",
-         "no-leading-space", "rowspan-zero"],
-)
-def test_malformed_span_tokens_ignored_like_reference(attr, ref_otsl):
-    """Non-canonical span attribute tokens are dict-misses in the reference
-    (otsl.py:267-309) — the cell parses as a plain fcel. Assert our ref
-    variant matches the live reference byte-for-byte on such streams."""
-    toks = ["<tr>", "<td", attr, ">", "</td>", "<td>", "</td>", "</tr>",
-            "<tr>", "<td>", "</td>", "<td>", "</td>", "</tr>"]
-    empties = [False] * 4
-    ref = ref_html_to_otsl(ref_otsl, toks, empties)
-    ours = otsl_ops.html_to_otsl_ref(toks, empties)
-    assert ours is not None
-    assert ours.tags == ref["html"]["structure"]["tokens"], attr
-    assert {k: v for k, v in ours.spans.items()} == ref["otsl_spans"], attr

@@ -223,21 +223,6 @@ def test_domain_stats_distinct_uses_expand(spark):
     assert "Expand" in plan
 
 
-def test_pagerank_iteration_plan_has_no_cartesian(spark):
-    """A symbolic PageRank iteration (the loop body link_pagerank
-    materializes per round): every scalar (N, dangling mass) rides a
-    broadcast nested-loop over a 1-row side; the edge⋈ranks joins are
-    hash/merge equi-joins; nothing degenerates to a CartesianProduct.
-    (The query itself returns a distributed temp-parquet scan — cache
-    hygiene without a driver collect — so the audit targets the
-    iteration frame.)"""
-    from docling_ibm_models_spark.plans.queries import pagerank_iteration_frame
-
-    plan = plan_of(pagerank_iteration_frame(spark, SF_MED))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastHashJoin" in plan or "ShuffledHashJoin" in plan or "SortMergeJoin" in plan
-
-
 def test_surprisal_and_decontaminate_plan_quality(spark):
     """Unigram surprisal: pure JVM exprs, hash aggregates for vocab+doc
     rollup, total-count scalar on a broadcast (no cartesian). De-contam:

@@ -115,72 +115,3 @@ def test_bbox_sync_and_desync_repair_parity(seed, tfp):
     ref_match, ref_bboxes = tfp.TFPredictor._check_bbox_sync(REF, copy.deepcopy(pred))
     got_match, got_bboxes = ours_rg.check_bbox_sync(copy.deepcopy(pred))
     assert (got_match, got_bboxes) == (ref_match, ref_bboxes)
-
-
-@pytest.mark.parametrize("seed", range(10))
-def test_coordinate_transforms_parity(seed, tfp):
-    rng = random.Random(64000 + seed)
-    table_bbox = [100.0, 200.0, 800.0, 900.0]
-    for _ in range(20):
-        x1, y1 = rng.uniform(100, 700), rng.uniform(200, 800)
-        bbox = [x1, y1, x1 + rng.uniform(1, 90), y1 + rng.uniform(1, 90)]
-        ref = tfp.TFPredictor.page_coords_to_table_coords(REF, bbox, table_bbox, 448, 448)
-        got = ours_rg.page_coords_to_table_coords(bbox, table_bbox, 448, 448)
-        assert got == ref
-    bboxes = [[rng.random() for _ in range(4)] for _ in range(10)]
-    ratio = rng.uniform(0.5, 2.0)
-    ref = tfp.TFPredictor._depad_bboxes(REF, copy.deepcopy(bboxes), ratio)
-    got = ours_rg.depad_bboxes(copy.deepcopy(bboxes), ratio)
-    assert got == ref
-
-
-@pytest.mark.parametrize("seed", range(10))
-def test_dummy_path_parity(seed, tfp):
-    """predict_dummy path: match_cells_dummy + _generate_tf_response_dummy."""
-    import sys
-
-    sys.path.insert(0, "/root/reference")
-    from docling_ibm_models.tableformer.data_management.tf_cell_matcher import (
-        CellMatcher,
-    )
-
-    from docling_ibm_models_spark.operators import cell_matcher as ours_cm
-
-    rng = random.Random(70000 + seed)
-    pred = random_prediction(rng)
-    page = random_page(rng, rng.randint(1, 40))
-    table_bbox = [100.0, 200.0, 800.0, 900.0]
-    ref_cm = CellMatcher({"predict": {"pdf_cell_iou_thres": 0.05}})
-    ref = ref_cm.match_cells_dummy(copy.deepcopy(page), list(table_bbox), dict(pred))
-    got = ours_cm.match_cells_dummy(copy.deepcopy(page), list(table_bbox), dict(pred))
-    for key in ("table_cells", "pdf_cells", "matches", "prediction_bboxes_page"):
-        assert got[key] == ref[key], key
-
-    ref_resp = tfp.TFPredictor._generate_tf_response_dummy(REF, ref["table_cells"])
-    got_resp = ours_rg.generate_tf_response_dummy(got["table_cells"])
-    assert got_resp == ref_resp
-
-
-def test_resize_plan_and_bbox_scale_parity(tfp):
-    """P3 scale-factor semantics vs reference resize_img (cv2 faked; the
-    mock records the dim argument) + multi_table_predict bbox scaling."""
-    import numpy as np
-
-    class _Img:
-        def __init__(self, h, w):
-            self.shape = (h, w, 3)
-
-    import docling_ibm_models.tableformer.data_management.tf_predictor as ref_tfp
-
-    for h, w, kw in [(1612, 1237, {"height": 1024}), (500, 800, {"width": 640}),
-                     (1024, 1024, {}), (333, 777, {"height": 512})]:
-        ref_out, ref_sf = tfp.TFPredictor.resize_img(REF, _Img(h, w), **kw)
-        dim, sf = ours_rg.resize_plan(h, w, **kw)
-        assert sf == ref_sf
-        if kw:
-            called_dim = ref_tfp.cv2.resize.call_args[0][1]
-            assert dim == called_dim
-
-    scaled, crops = ours_rg.scale_table_bbox([178.0, 748.0, 1061.0, 976.0], 1024 / 1612)
-    assert scaled == [c * (1024 / 1612) for c in [178.0, 748.0, 1061.0, 976.0]]
-    assert crops == (round(scaled[1]), round(scaled[3]), round(scaled[0]), round(scaled[2]))

@@ -13,16 +13,20 @@ from __future__ import annotations
 import datetime as dt
 import os
 import zlib
+from functools import partial
 
 import pytest
 
 from docling_ibm_models_spark.sources.warc_source import (
+    _CONVERSION,
+    _LAYOUTS,
+    _RESPONSE,
+    _read_record_from,
+    _records_to_rows,
+    _write_archive,
+    _write_archives,
     iter_warc_records,
     pages_from_warc,
-    warc_records_to_rows,
-    wet_records_to_rows,
-    write_warc,
-    write_wet,
 )
 
 from .conftest import SF_MED, SF_SMALL
@@ -44,8 +48,15 @@ def _recs(n: int, salt: str = "") -> list[tuple[str, dt.datetime, bytes]]:
 def _kind(kind: str):
     """(writer, row reader, row width) of a record kind."""
     if kind == "warc":
-        return write_warc, warc_records_to_rows, 6
-    return write_wet, wet_records_to_rows, 5
+        return partial(_write_archive, _RESPONSE), partial(_records_to_rows, _RESPONSE), 6
+    return partial(_write_archive, _CONVERSION), partial(_records_to_rows, _CONVERSION), 5
+
+
+def _fetch(path: str, offset: int):
+    """One record by (archive path, CDX offset), read the way
+    ``fetch_warc_bodies`` reads it: ``(headers, block, bytes_read)``."""
+    with open(path, "rb") as f:
+        return _read_record_from(f, offset)
 
 
 _LAYOUTS = ["record", "file", "none"]
@@ -85,9 +96,9 @@ def test_record_gzip_offsets_are_member_starts(tmp_path):
 
     p = str(tmp_path / "cc.warc.gz")
     recs = _recs(5)
-    write_warc(p, recs, compression="record")
+    _write_archive(_RESPONSE, p, recs, compression="record")
     raw = open(p, "rb").read()
-    for _, _, html, _, _, off in warc_records_to_rows("cc", raw):
+    for _, _, html, _, _, off in _records_to_rows(_RESPONSE, "cc", raw):
         member = gzip.GzipFile(fileobj=io.BytesIO(raw[off:])).read()
         assert member.startswith(b"WARC/1.0\r\n")
         assert html in member
@@ -107,7 +118,7 @@ def test_bare_lf_headers(tmp_path):
         + block
         + b"\n\n"
     )
-    rows = list(warc_records_to_rows("lf", rec))
+    rows = list(_records_to_rows(_RESPONSE, "lf", rec))
     assert rows == [
         ("https://lf.example/x", TS0, body, None, "lf", 0),
     ]
@@ -121,7 +132,7 @@ def test_pages_from_warc_spark_scan(spark, tmp_path):
     expected: dict[str, tuple[dt.datetime, bytes]] = {}
     for i, comp in enumerate(["record", "file", "none"]):
         recs = _recs(6, salt=f"f{i}-")
-        write_warc(str(warc_dir / f"part-{i}.warc.gz"), recs, compression=comp)
+        _write_archive(_RESPONSE, str(warc_dir / f"part-{i}.warc.gz"), recs, compression=comp)
         expected.update({u: (ts, html) for u, ts, html in recs})
 
     df = pages_from_warc(spark, str(warc_dir))
@@ -137,7 +148,7 @@ def test_pages_from_warc_spark_scan(spark, tmp_path):
         assert r.warc_offset >= 0
     # offsets from the Spark path match the pure-python parser exactly
     raw0 = open(warc_dir / "part-0.warc.gz", "rb").read()
-    py_offsets = {u: off for u, _, _, _, _, off in warc_records_to_rows("x", raw0)}
+    py_offsets = {u: off for u, _, _, _, _, off in _records_to_rows(_RESPONSE, "x", raw0)}
     for r in rows:
         if r.warc_file.endswith("part-0.warc.gz"):
             assert r.warc_offset == py_offsets[r.url]
@@ -162,7 +173,7 @@ def test_extraction_through_warc_path_is_byte_identical(spark, tmp_path):
     third = (len(src) + 2) // 3
     for i, comp in enumerate(["record", "file", "none"]):
         chunk = src[i * third : (i + 1) * third]
-        write_warc(
+        _write_archive(_RESPONSE, 
             str(warc_dir / f"crawl-{i}.warc.gz"),
             [(u, ts, h) for u, ts, h, _ in chunk],
             compression=comp,
@@ -188,7 +199,7 @@ def test_warc_extraction_path_is_shuffle_free(spark, tmp_path):
 
     warc_dir = tmp_path / "w"
     os.makedirs(warc_dir)
-    write_warc(str(warc_dir / "a.warc.gz"), _recs(3), compression="record")
+    _write_archive(_RESPONSE, str(warc_dir / "a.warc.gz"), _recs(3), compression="record")
     from .test_plan_quality import plan_of
 
     out = extract_doc_text(pages_from_warc(spark, str(warc_dir)))
@@ -208,12 +219,11 @@ def test_warc_lineage_and_resume(spark, tmp_path):
         snapshot_id_for,
     )
     from docling_ibm_models_spark.sources.pages_source import pages_from_documents
-    from docling_ibm_models_spark.sources.warc_source import write_warc_archives
 
     out_dir = str(tmp_path / "out")
     warc_dir = str(tmp_path / "archives")
     pages = pages_from_documents(spark, SF_SMALL, parallelism=8)
-    n_archives = write_warc_archives(pages.repartition(8, "url"), warc_dir)
+    n_archives = _write_archives(_RESPONSE, pages.repartition(8, "url"), warc_dir, _LAYOUTS)
     assert n_archives == 8
     snap = snapshot_id_for(f"warc|{SF_SMALL}")
 
@@ -241,16 +251,16 @@ def test_corrupt_tail_keeps_parsed_records(tmp_path):
     """A truncated/corrupted gzip member costs its own records, never the
     records already parsed (a single bad archive must not kill the task)."""
     p = str(tmp_path / "t.warc.gz")
-    write_warc(p, _recs(6), compression="record")
+    _write_archive(_RESPONSE, p, _recs(6), compression="record")
     raw = bytearray(open(p, "rb").read())
-    offsets = [r[5] for r in warc_records_to_rows("t", bytes(raw))]
+    offsets = [r[5] for r in _records_to_rows(_RESPONSE, "t", bytes(raw))]
     cut = offsets[4] + 10  # truncate inside the 5th response's member
-    rows = list(warc_records_to_rows("t", bytes(raw[:cut])))
+    rows = list(_records_to_rows(_RESPONSE, "t", bytes(raw[:cut])))
     assert [r[0] for r in rows] == [u for u, _, _ in _recs(4)]
     # corrupt (not truncate) the same member: flip bytes mid-member
     bad = bytearray(raw)
     bad[offsets[4] + 12 : offsets[4] + 16] = b"\x00\x00\x00\x00"
-    rows2 = list(warc_records_to_rows("t", bytes(bad)))
+    rows2 = list(_records_to_rows(_RESPONSE, "t", bytes(bad)))
     assert [r[0] for r in rows2] == [u for u, _, _ in _recs(4)]
 
 
@@ -284,8 +294,8 @@ def test_warc_round_trip_property():
 
         with tempfile.TemporaryDirectory() as td:
             p = os.path.join(td, "x.warc")
-            write_warc(p, recs, compression=comp)
-            rows = list(warc_records_to_rows("x", open(p, "rb").read()))
+            _write_archive(_RESPONSE, p, recs, compression=comp)
+            rows = list(_records_to_rows(_RESPONSE, "x", open(p, "rb").read()))
         assert [(r[0], r[1], r[2]) for r in rows] == recs
 
     check()
@@ -297,7 +307,7 @@ def test_malformed_content_length_resyncs(tmp_path):
     keeps draining — no unbounded accumulation)."""
     p = str(tmp_path / "bad.warc")
     recs = _recs(7)
-    write_warc(p, recs, compression="none")
+    _write_archive(_RESPONSE, p, recs, compression="none")
     raw = open(p, "rb").read()
     # corrupt response1's WARC-level Content-Length. Each response holds
     # TWO "Content-Length:" headers (WARC record + inner HTTP block); the
@@ -307,7 +317,7 @@ def test_malformed_content_length_resyncs(tmp_path):
     for _ in range(4):
         idx = raw.find(anchor, idx + 1)
     bad = raw[:idx] + b"Content-Length: xx" + raw[idx + len(anchor) + 3 :]
-    rows = list(warc_records_to_rows("bad", bad))
+    rows = list(_records_to_rows(_RESPONSE, "bad", bad))
     got = [r[0] for r in rows]
     want = [u for u, _, _ in recs]
     assert want[0] in got and set(want[2:]).issubset(set(got))
@@ -327,23 +337,22 @@ def test_warc11_fractional_second_dates():
         + block
         + b"\r\n\r\n"
     )
-    rows = list(warc_records_to_rows("f", rec))
+    rows = list(_records_to_rows(_RESPONSE, "f", rec))
     assert rows[0][1] == TS0.replace(microsecond=123456)
 
 
 def test_archive_extension_matches_compression(spark, tmp_path):
-    """write_warc_archives names plain archives .warc and gzip ones
+    """The archive sink names plain archives .warc and gzip ones
     .warc.gz — extension-keyed consumers (zcat, pathGlobFilter) must not
     be lied to."""
     import glob
     import gzip
 
     from docling_ibm_models_spark.sources.pages_source import pages_from_documents
-    from docling_ibm_models_spark.sources.warc_source import write_warc_archives
 
     out = str(tmp_path / "arch")
     pages = pages_from_documents(spark, SF_SMALL, parallelism=6, max_doc_id=60)
-    write_warc_archives(pages.repartition(6, "url"), out)
+    _write_archives(_RESPONSE, pages.repartition(6, "url"), out, _LAYOUTS)
     names = sorted(glob.glob(f"{out}/*"))
     assert names
     for f in names:
@@ -359,7 +368,7 @@ def test_archive_extension_matches_compression(spark, tmp_path):
 
 @pytest.mark.parametrize("kind", ["warc", "wet"])
 def test_naive_datetime_written_as_utc(tmp_path, kind):
-    """A NAIVE timestamp passed to write_warc / write_wet is treated as
+    """A NAIVE timestamp passed to the archive writer is treated as
     UTC, never shifted by the host zone (astimezone() on a naive datetime
     interprets it as host-local time)."""
     import os
@@ -416,18 +425,17 @@ def _big_recs(n: int, body_kb: int = 8) -> list[tuple[str, dt.datetime, bytes]]:
 
 @pytest.mark.parametrize("compression", ["record", "none"])
 def test_cdx_fetch_identity_and_byte_evidence(tmp_path, compression):
-    """read_warc_record_at must return the IDENTICAL record the sequential
+    """A CDX point read must return the IDENTICAL record the sequential
     scan yields at that offset (the identity a CDX index promises), while
     touching only ~one record's worth of the archive — the point of
     recording member offsets. The archive here is the multi-record layout
     of a real CC file (hundreds of records; a 1 GB archive only scales the
     record count, not the per-fetch cost)."""
-    from docling_ibm_models_spark.sources.warc_source import read_warc_record_at
 
     ext = ".warc" if compression == "none" else ".warc.gz"
     p = str(tmp_path / f"cc{ext}")
     recs = _big_recs(400)
-    write_warc(p, recs, compression=compression)
+    _write_archive(_RESPONSE, p, recs, compression=compression)
     size = os.path.getsize(p)
     raw = open(p, "rb").read()
     scan = [
@@ -438,7 +446,7 @@ def test_cdx_fetch_identity_and_byte_evidence(tmp_path, compression):
     assert len(scan) == 400
     # fetch every 37th record + the very last one by its recorded offset
     for url, block, off in scan[::37] + [scan[-1]]:
-        headers, got_block, nread = read_warc_record_at(p, off)
+        headers, got_block, nread = _fetch(p, off)
         assert headers.get("warc-target-uri") == url
         assert got_block == block
         # byte-count evidence: a point fetch reads ~one record (<=256 KiB
@@ -449,22 +457,21 @@ def test_cdx_fetch_identity_and_byte_evidence(tmp_path, compression):
 
 
 def test_cdx_fetch_rejects_non_record_offsets(tmp_path):
-    from docling_ibm_models_spark.sources.warc_source import read_warc_record_at
 
     p = str(tmp_path / "cc.warc.gz")
-    write_warc(p, _big_recs(5), compression="record")
+    _write_archive(_RESPONSE, p, _big_recs(5), compression="record")
     raw = open(p, "rb").read()
     offs = [off for _, _, off in iter_warc_records(raw)]
     with pytest.raises(ValueError):
-        read_warc_record_at(p, offs[1] + 3)  # mid-member: not a gzip start
+        _fetch(p, offs[1] + 3)  # mid-member: not a gzip start
     with pytest.raises(ValueError):
-        read_warc_record_at(p, len(raw) + 10)  # past EOF
+        _fetch(p, len(raw) + 10)  # past EOF
 
 
 def _seekable_archive(tmp_path, compression, recs):
     """(path, raw bytes, response offsets) of a seekable archive."""
     p = str(tmp_path / ("cc.warc" if compression == "none" else "cc.warc.gz"))
-    write_warc(p, recs, compression=compression)
+    _write_archive(_RESPONSE, p, recs, compression=compression)
     raw = open(p, "rb").read()
     offs = [off for h, _, off in iter_warc_records(raw) if h.get("warc-type") == "response"]
     return p, raw, offs
@@ -472,23 +479,21 @@ def _seekable_archive(tmp_path, compression, recs):
 
 @pytest.mark.parametrize("compression", ["record", "none"])
 def test_cdx_fetch_rejects_truncated_archive(tmp_path, compression):
-    from docling_ibm_models_spark.sources.warc_source import read_warc_record_at
 
     p, raw, offs = _seekable_archive(tmp_path, compression, _big_recs(3))
     # cut the file halfway through the last record
     with open(p, "wb") as f:
         f.write(raw[: offs[-1] + (len(raw) - offs[-1]) // 2])
     with pytest.raises(ValueError, match="archive truncated"):
-        read_warc_record_at(p, offs[-1])
+        _fetch(p, offs[-1])
     # the records before the cut still fetch
-    assert read_warc_record_at(p, offs[0])[0]["warc-type"] == "response"
+    assert _fetch(p, offs[0])[0]["warc-type"] == "response"
 
 
 @pytest.mark.parametrize("compression", ["record", "none"])
 def test_cdx_fetch_rejects_unparseable_content_length(tmp_path, compression):
     import gzip
 
-    from docling_ibm_models_spark.sources.warc_source import read_warc_record_at
 
     rec = (
         b"WARC/1.0\r\nWARC-Type: response\r\n"
@@ -499,16 +504,12 @@ def test_cdx_fetch_rejects_unparseable_content_length(tmp_path, compression):
     with open(p, "wb") as f:
         f.write(gzip.compress(rec, mtime=0) if compression == "record" else rec)
     with pytest.raises(ValueError, match="unparseable record header"):
-        read_warc_record_at(p, 0)
+        _fetch(p, 0)
 
 
 def test_cdx_fetch_rejects_mid_record_offset_in_plain_archive(tmp_path):
     import io
 
-    from docling_ibm_models_spark.sources.warc_source import (
-        _read_record_from,
-        read_warc_record_at,
-    )
 
     class CountingReads(io.BytesIO):
         def read(self, n=-1):
@@ -520,7 +521,7 @@ def test_cdx_fetch_rejects_mid_record_offset_in_plain_archive(tmp_path):
     body_at = raw.index(b"<html>", offs[1])
     for off in (offs[1] + 3, body_at):  # inside the header; inside the block
         with pytest.raises(ValueError, match="not a record start"):
-            read_warc_record_at(p, off)
+            _fetch(p, off)
         # refused on the first read, not after reading ahead for a record
         reads: list[int] = []
         with pytest.raises(ValueError, match="not a record start"):
@@ -535,10 +536,10 @@ def test_cdx_fetch_refuses_records_over_the_cap(tmp_path, compression, monkeypat
     # ~66 KiB records: larger than one 32 KiB read, so both layouts have
     # buffered past a 40 KiB cap before the record is complete
     p, _, offs = _seekable_archive(tmp_path, compression, _big_recs(2, body_kb=64))
-    assert warc_source.read_warc_record_at(p, offs[0])[1]  # fetches uncapped
+    assert _fetch(p, offs[0])[1]  # fetches uncapped
     monkeypatch.setattr(warc_source, "_MAX_FETCH_RECORD", 40 * 1024)
     with pytest.raises(ValueError, match="record exceeds fetch cap"):
-        warc_source.read_warc_record_at(p, offs[0])
+        _fetch(p, offs[0])
 
 
 def test_fetch_warc_bodies_spark_stage(tmp_path, spark):
@@ -546,22 +547,19 @@ def test_fetch_warc_bodies_spark_stage(tmp_path, spark):
     seek-read, url/ts re-derived from the FETCHED record; rows must equal
     the scan-read rows for the sampled offsets across BOTH seekable
     layouts."""
-    from docling_ibm_models_spark.sources.warc_source import (
-        fetch_warc_bodies,
-        warc_records_to_rows,
-    )
+    from docling_ibm_models_spark.sources.warc_source import fetch_warc_bodies
 
     paths = []
     for i, comp in enumerate(["record", "none", "record"]):
         ext = ".warc" if comp == "none" else ".warc.gz"
         p = str(tmp_path / f"a{i}{ext}")
-        write_warc(p, _recs(9, salt=f"s{i}-"), compression=comp)
+        _write_archive(_RESPONSE, p, _recs(9, salt=f"s{i}-"), compression=comp)
         paths.append(p)
     expected = {}
     cdx_rows = []
     for p in paths:
         raw = open(p, "rb").read()
-        for url, ts, html, lang, _, off in warc_records_to_rows(p, raw):
+        for url, ts, html, lang, _, off in _records_to_rows(_RESPONSE, p, raw):
             if zlib.crc32(url.encode()) % 3 == 0:
                 continue  # sample: skip a third
             expected[url] = (ts, html)
@@ -602,19 +600,16 @@ def test_wet_reader_skips_response_records(tmp_path):
     # pages reader only responses
     p_warc = str(tmp_path / "m.warc")
     p_wet = str(tmp_path / "m.warc.wet")
-    write_warc(p_warc, _recs(3), compression="none")
-    write_wet(p_wet, _wet_recs(2), compression="none")
+    _write_archive(_RESPONSE, p_warc, _recs(3), compression="none")
+    _write_archive(_CONVERSION, p_wet, _wet_recs(2), compression="none")
     with open(p_warc, "rb") as f1, open(p_wet, "rb") as f2:
         mixed = f1.read() + f2.read()
-    assert len(list(wet_records_to_rows("m", mixed))) == 2
-    assert len(list(warc_records_to_rows("m", mixed))) == 3
+    assert len(list(_records_to_rows(_CONVERSION, "m", mixed))) == 2
+    assert len(list(_records_to_rows(_RESPONSE, "m", mixed))) == 3
 
 
 def test_wet_spark_scan_and_distributed_writer(spark, tmp_path):
-    from docling_ibm_models_spark.sources.warc_source import (
-        text_from_wet,
-        write_wet_archives,
-    )
+    from docling_ibm_models_spark.sources.warc_source import text_from_wet
 
     recs = _wet_recs(20)
     df = spark.createDataFrame(
@@ -622,7 +617,7 @@ def test_wet_spark_scan_and_distributed_writer(spark, tmp_path):
         "url string, warc_ts timestamp, extracted_text string",
     ).repartition(4, "url")
     out = str(tmp_path / "wet")
-    n_archives = write_wet_archives(df, out)
+    n_archives = _write_archives(_CONVERSION, df, out, _LAYOUTS)
     assert n_archives == 4
     exts = {f.split(".", 1)[1] for f in os.listdir(out)}
     assert exts <= {"warc.wet", "warc.wet.gz"}
